@@ -397,10 +397,12 @@ class RoundPartitions:
     MIS rounds) keep AQE: runtime coalescing/skew handling still pays
     there.
 
-    Caveat: ``spark.sql.shuffle.partitions`` is session-global — a
-    concurrent query planned while an operator loop is running sees
-    the clamped value.  These loops are sub-minute and driver-bound;
-    the trade is documented rather than worked around.
+    Caveat: ``spark.sql.shuffle.partitions`` (and, with
+    ``disable_aqe``, ``spark.sql.adaptive.enabled``) is session-global —
+    a concurrent query planned while an operator loop is running sees
+    the clamped value and, for the ``disable_aqe`` loops, no AQE.
+    These loops are sub-minute and driver-bound; the trade is
+    documented rather than worked around.
     """
 
     def __init__(

@@ -24,16 +24,31 @@ Ids of any orderable type are supported by factorizing to int64 first
 (mismo/_factorizer.py:12-152) — but *without* the reference's global
 ``dense_rank`` (a single-partition sort at scale): distinct ids get
 ``monotonically_increasing_id`` codes and are hash-joined back.
+
+Driver finish (``algorithm="star"`` only): an edge set small enough
+for Spark to broadcast (``spark.sql.autoBroadcastJoinThreshold``) is
+collected once as Arrow and solved in the driver — ``pd.factorize(sort=
+True)`` codes (so the smallest code is the smallest id) and a numpy
+hook-and-shortcut union-find — before any round or factorize job runs.
+A round costs several Spark jobs whatever the edge count, while the
+driver needs one collect and a few numpy passes; the labels are the
+same minimum-id fixed point.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
 
 from mismo_spark.types.linkage import ID_L, ID_R
 
 _U, _V = "u", "v"
+_INTEGRAL = (ByteType, IntegerType, LongType, ShortType)
+# an edge of two int64 ids — the narrowest edge the driver can hold, so
+# threshold // _EDGE_BYTES bounds the rows the driver finish collects
+_EDGE_BYTES = 16
 
 
 def _chk(df: DataFrame, checkpoint_dir: str | None, tag: str) -> DataFrame:
@@ -70,10 +85,25 @@ def connected_components(
 
     ``records`` (optional, column ``record_id``) adds singleton
     components for unlinked records
-    (mismo/cluster/_connected_components.py:305-314).
-    """
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+    (mismo/cluster/_connected_components.py:305-314).  With ``records``
+    the output has one row per ``records`` row; without it, one row
+    per distinct endpoint of ``links``.
 
+    ``links`` should be unique pairs.  Duplicates never change a label
+    (every step is a min aggregation), but the rounds do not remove
+    them up front: ``star`` carries them through the first large-star
+    pass and ``naive`` re-joins them every round, so a caller with a
+    non-unique link table (raw blocked candidates, say) pays for the
+    duplicates in those rounds.  Self-loops are ignored.
+
+    With ``algorithm="star"``, integral or string ids, and at most
+    ``spark.sql.autoBroadcastJoinThreshold // 16`` edges whose Arrow
+    form also fits that many bytes, the components are solved on the
+    driver (see the module docstring); a threshold of ``-1`` turns
+    this off.  Bigger edge sets cost one bounded ``limit`` pass, then
+    run the star rounds.  With ``checkpoint_dir`` the driver labels
+    are written there as parquet, as the rounds' checkpoints would be.
+    """
     edges = links.select(F.col(ID_L).alias(_U), F.col(ID_R).alias(_V))
 
     def _run(int_edges: DataFrame) -> DataFrame:
@@ -83,24 +113,28 @@ def connected_components(
             return _cc_naive(int_edges, max_iter, checkpoint_dir)
         raise ValueError(f"unknown algorithm {algorithm!r}")
 
-    integral = (ByteType, ShortType, IntegerType, LongType)
     id_types = [links.schema[ID_L].dataType, links.schema[ID_R].dataType]
     if records is not None:
         id_types.append(records.schema["record_id"].dataType)
-    if all(isinstance(t, integral) for t in id_types):
+    integral = all(isinstance(t, _INTEGRAL) for t in id_types)
+    if algorithm == "star" and (integral or all(t == StringType() for t in id_types)):
+        done = _driver_components(edges, records, checkpoint_dir)
+        if done is not None:
+            return done
+    if integral:
         # -- fast path: ids are already integral ------------------------
         # Both algorithms converge with every node labelled by the
         # MINIMUM id of its component, which for integral ids is exactly
         # mismo's canonical representative — so the factorize/decode/
         # relabel machinery below (~6 extra shuffles, two of them O(V)
-        # joins) is pure overhead and skipped.  This is the hot path:
-        # the pipeline's record_id is int64.
+        # joins) is pure overhead and skipped.  This path serves callers
+        # with numeric ids; the pipeline's record_id is the url string,
+        # which takes the factorize path below once the edge set is too
+        # big for the driver finish.
         # No up-front .distinct(): both algorithms are duplicate-
-        # insensitive (min-label and groupBy-min aggregation; the first
-        # small-star round's closing distinct canonicalizes the edge
-        # set anyway), and typical callers feed already-unique link
-        # tables — the dedup exchange over the full edge relation was
-        # pure overhead on the hot path.
+        # insensitive (see the docstring's uniqueness note), and
+        # typical callers feed already-unique link tables — the dedup
+        # exchange over the full edge relation was pure overhead here.
         labels = _run(edges.filter(F.col(_U) != F.col(_V)))
         out = labels.withColumnRenamed("id", "record_id")
         base = (
@@ -112,10 +146,7 @@ def connected_components(
             .unionByName(edges.select(F.col(_V).alias("record_id")))
             .distinct()
         )
-        return base.join(out, "record_id", "left").select(
-            "record_id",
-            F.coalesce(F.col("component"), F.col("record_id")).alias("component"),
-        )
+        return _label_all(base, out)
 
     # -- factorize arbitrary ids → int64 (no global sort) ----------------
     ids = edges.select(F.col(_U).alias("record_id")).unionByName(
@@ -157,6 +188,101 @@ def connected_components(
         # only ids that appear in edges
         return out
     return records.select("record_id").join(out, "record_id", "left")
+
+
+def _label_all(base: DataFrame, labels: DataFrame) -> DataFrame:
+    """Every ``base`` record_id with its label; records ``labels`` does
+    not mention are singletons (their own minimum)."""
+    return base.join(labels, "record_id", "left").select(
+        "record_id",
+        F.coalesce(F.col("component"), F.col("record_id")).alias("component"),
+    )
+
+
+def _min_roots(cu: np.ndarray, cv: np.ndarray, n: int) -> np.ndarray:
+    """Component root of each node ``0..n-1`` under edges ``(cu, cv)``:
+    the smallest node of its component.
+
+    Hook-and-shortcut union-find, vectorized: pointer-jump every node
+    to its root, then hook each root that an edge joins to a smaller
+    root onto the smallest such root (``np.minimum.at``).  Parents only
+    ever decrease and ``parent[x] <= x``, so the trees stay acyclic and
+    a root is the minimum of its tree; every round with a crossing edge
+    removes a root, and edges inside one tree are dropped for good."""
+    parent = np.arange(n)
+    while True:
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+        pu, pv = parent[cu], parent[cv]
+        cross = pu != pv
+        if not cross.any():
+            return parent
+        cu, cv, pu, pv = cu[cross], cv[cross], pu[cross], pv[cross]
+        lo = np.minimum(pu, pv)
+        np.minimum.at(parent, pu, lo)
+        np.minimum.at(parent, pv, lo)
+
+
+def _driver_components(
+    edges: DataFrame, records: DataFrame | None, checkpoint_dir: str | None
+) -> DataFrame | None:
+    """The star fixed point solved on the driver, or None when the
+    edge set is over the broadcast budget (rows or Arrow bytes).
+
+    Collects at most ``budget // _EDGE_BYTES + 1`` edges — one job —
+    so the driver never holds more than the threshold allows before
+    deciding.  Output rows are exactly ``connected_components``':
+    labels for every endpoint (a NULL endpoint yields the same
+    ``(NULL, NULL)`` row the Spark paths emit), or ``records``
+    completed by the shared left-join + coalesce."""
+    import pandas as pd
+    import pyarrow as pa
+
+    spark = edges.sparkSession
+    # the threshold in bytes, as the planner reads it; -1 turns
+    # broadcasting, and so the driver finish, off
+    budget = int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+    cap = budget // _EDGE_BYTES
+    if cap <= 0:
+        return None
+    # one id type for both columns (Spark's union widening), so the
+    # factorize sees one column and the labels keep the rounds' type
+    id_type = edges.select(_U).union(edges.select(_V)).schema[0].dataType
+    tbl = (
+        edges.select(F.col(_U).cast(id_type), F.col(_V).cast(id_type))
+        .limit(cap + 1)
+        .toArrow()
+    )
+    if tbl.num_rows > cap or tbl.nbytes > budget:
+        return None
+
+    ends = pd.concat(
+        [tbl.column(c).to_pandas(types_mapper=pd.ArrowDtype) for c in (_U, _V)],
+        ignore_index=True,
+    )
+    # sort=True: code order is id order, so the root code (the smallest
+    # in its component) decodes to the minimum record_id; NULL → -1
+    codes, uniques = pd.factorize(ends, sort=True)
+    codes = np.asarray(codes, dtype=np.int64)
+    cu, cv = codes[: tbl.num_rows], codes[tbl.num_rows :]
+    keep = (cu >= 0) & (cv >= 0)
+    ids = pa.array(uniques, type=tbl.schema.field(_U).type)
+    roots = _min_roots(cu[keep], cv[keep], len(ids))
+    comps = ids.take(pa.array(roots))
+    if records is None and (codes < 0).any():
+        ids = pa.concat_arrays([ids, pa.nulls(1, ids.type)])
+        comps = pa.concat_arrays([comps, pa.nulls(1, ids.type)])
+    solved = pa.table({"record_id": ids, "component": comps})
+    schema = f"record_id {id_type.simpleString()}, component {id_type.simpleString()}"
+    labels = spark.createDataFrame(solved, schema=schema)
+    if checkpoint_dir is not None:
+        labels = _chk(labels, checkpoint_dir, "driver")
+    if records is None:
+        return labels
+    return _label_all(records.select("record_id"), labels)
 
 
 def _cc_naive(edges: DataFrame, max_iter: int, checkpoint_dir: str | None) -> DataFrame:

@@ -72,7 +72,14 @@ def center_clustering(
     optionally drops links below a score floor first.  Record ids must
     be NON-NEGATIVE integers below 2^40 (the round encoding packs
     ``state * 2^40 + id + 1`` into a long); factorize other id types
-    first (cluster/cc.py does the same for its fast path)."""
+    first (cluster/cc.py does the same for its fast path).
+
+    Session-wide side effect: while the rounds run,
+    ``spark.sql.adaptive.enabled`` is ``false`` and
+    ``spark.sql.shuffle.partitions`` is clamped (both restored on
+    exit).  Any other query planned on the same session meanwhile —
+    from another thread, say — runs without AQE's coalescing and skew
+    handling and with the clamped partition count."""
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
     integral = (ByteType, ShortType, IntegerType, LongType)

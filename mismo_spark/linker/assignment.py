@@ -230,6 +230,13 @@ def one_to_one_links(
     remainder empties — with the default 60 that means a
     strictly-descending alternating path of ~120 edges, which on real
     similarity scores indicates degenerate input, not a small bound.
+
+    Session-wide side effect: while the rounds run,
+    ``spark.sql.adaptive.enabled`` is ``false`` and
+    ``spark.sql.shuffle.partitions`` is clamped (both restored on
+    exit).  Any other query planned on the same session meanwhile —
+    from another thread, say — runs without AQE's coalescing and skew
+    handling and with the clamped partition count.
     """
     if score_col not in links.columns:
         raise ValueError(f"links has no column {score_col!r}; has {links.columns}")

@@ -252,6 +252,25 @@ def test_auto_q(spark):
         edit_distance_pairs(pdf, "name", max_distance=1, q="bogus")
 
 
+def test_choose_q_uses_true_length_on_repetitive_strings(spark):
+    """q is capped at ceil(avg_len / 2), so avg_len must be the string
+    length.  A 24-char string repeating a 3-char block has only 5
+    distinct padded 2-grams; counting those as its length capped q at
+    2, which cannot keep this 3000-row field's candidates linear."""
+    import random
+    import warnings
+
+    from mismo_spark.text.edjoin import choose_q
+
+    rng = random.Random(5)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    rows = [("".join(rng.choice(letters) for _ in range(3)) * 8,) for _ in range(3000)]
+    df = spark.createDataFrame(rows, "name string")
+    with warnings.catch_warnings():
+        warnings.filterwarnings("error", message="choose_q")
+        assert choose_q(df, max_distance=1) >= 3
+
+
 def test_choose_q_empty_and_null(spark):
     from mismo_spark.text.edjoin import choose_q
 

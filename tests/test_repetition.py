@@ -264,3 +264,57 @@ def test_ngram_signals_rowlocal_matches_bruteforce(spark):
             min(sum(v * len(g) for g, v in c.items() if v >= 2) / tl, 1.0), 9
         )
         assert got[rid] == (exp_top, exp_dup), (rid, got[rid], exp_top, exp_dup)
+
+
+# generous: the plan finishes in seconds; the failure it guards against
+# (a filter on the output pushed into the higher-order-function chain,
+# which re-evaluates the inlined chain per array element) never does
+FILTER_DEADLINE_S = 180
+
+
+def test_filter_on_dup_ngram_char_frac_finishes(spark):
+    """``optimizer_barrier`` keeps a caller's filter on the output from
+    being pushed into the run-length chain.  It relies on Catalyst
+    treating ``shuffle`` as non-deterministic; if a Spark upgrade
+    changes that, this filter hangs instead of returning, so it runs
+    under an in-process deadline and its jobs are cancelled on expiry."""
+    import random
+    import threading
+
+    rng = random.Random(3)
+    vocab = [f"w{i}" for i in range(40)]
+    rows = []
+    for i in range(300):
+        # a per-document vocabulary size spreads the signal over [0, 1]
+        k = rng.randint(2, 40)
+        rows.append((i, " ".join(rng.choice(vocab[:k]) for _ in range(60))))
+    docs = spark.createDataFrame(rows, "record_id long, text string")
+    signals = ngram_repetition_signals(docs, n=2)
+    want = sorted(
+        r["record_id"] for r in signals.collect() if r["dup_ngram_char_frac"] > 0.5
+    )
+
+    result: dict = {}
+
+    def run():
+        try:
+            result["ids"] = sorted(
+                r["record_id"]
+                for r in signals.filter(F.col("dup_ngram_char_frac") > 0.5)
+                .select("record_id")
+                .collect()
+            )
+        except Exception as e:  # surfaced below, not lost in the thread
+            result["error"] = e
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(FILTER_DEADLINE_S)
+    if worker.is_alive():
+        spark.sparkContext.cancelAllJobs()
+        worker.join(30)
+        pytest.fail(
+            f"filter on dup_ngram_char_frac did not finish in {FILTER_DEADLINE_S}s"
+        )
+    assert "error" not in result, result.get("error")
+    assert result["ids"] == want and 0 < len(want) < len(rows)
