@@ -9,11 +9,17 @@ cluster-set oracle.
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import DataFrame
 
 from mismo_spark.session import get_spark
+
+# The suite's data is tiny, but the JVM grows lazily toward get_spark's
+# 48g default heap and, over the whole suite in one process, outgrows a
+# 16 GB host. A few GB is ample for every test; an explicit setting wins.
+os.environ.setdefault("MISMO_SPARK_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")
