@@ -31,8 +31,10 @@ collected once as Arrow and solved in the driver — ``pd.factorize(sort=
 True)`` codes (so the smallest code is the smallest id) and a numpy
 hook-and-shortcut union-find — before any round or factorize job runs.
 A round costs several Spark jobs whatever the edge count, while the
-driver needs one collect and a few numpy passes; the labels are the
-same minimum-id fixed point.
+driver needs one size probe, one collect and a few numpy passes; the
+labels are the same minimum-id fixed point.  The edges are
+local-checkpointed first, so the probe, the collect and — over the
+budget — the rounds all read one materialization of the caller's plan.
 """
 
 from __future__ import annotations
@@ -46,8 +48,8 @@ from mismo_spark.types.linkage import ID_L, ID_R
 
 _U, _V = "u", "v"
 _INTEGRAL = (ByteType, IntegerType, LongType, ShortType)
-# an edge of two int64 ids — the narrowest edge the driver can hold, so
-# threshold // _EDGE_BYTES bounds the rows the driver finish collects
+# the fixed-width part of one edge in Arrow: two int64 ids, or two
+# string offsets with room to spare; string ids add their bytes on top
 _EDGE_BYTES = 16
 
 
@@ -96,13 +98,17 @@ def connected_components(
     non-unique link table (raw blocked candidates, say) pays for the
     duplicates in those rounds.  Self-loops are ignored.
 
-    With ``algorithm="star"``, integral or string ids, and at most
-    ``spark.sql.autoBroadcastJoinThreshold // 16`` edges whose Arrow
-    form also fits that many bytes, the components are solved on the
+    With ``algorithm="star"``, integral or string ids, and an edge set
+    of at most ``spark.sql.autoBroadcastJoinThreshold`` bytes (16 per
+    edge plus the UTF-8 bytes of string ids, measured by one aggregate
+    before anything is collected), the components are solved on the
     driver (see the module docstring); a threshold of ``-1`` turns
-    this off.  Bigger edge sets cost one bounded ``limit`` pass, then
-    run the star rounds.  With ``checkpoint_dir`` the driver labels
-    are written there as parquet, as the rounds' checkpoints would be.
+    this off and adds no job.  Bigger edge sets cost that aggregate,
+    over the edges the rounds then read, before the star rounds run.
+    The driver finish always reaches the fixed point: ``max_iter``
+    bounds only the Spark rounds.  With ``checkpoint_dir`` the driver
+    labels are written there as parquet, as the rounds' checkpoints
+    would be.
     """
     edges = links.select(F.col(ID_L).alias(_U), F.col(ID_R).alias(_V))
 
@@ -117,8 +123,17 @@ def connected_components(
     if records is not None:
         id_types.append(records.schema["record_id"].dataType)
     integral = all(isinstance(t, _INTEGRAL) for t in id_types)
-    if algorithm == "star" and (integral or all(t == StringType() for t in id_types)):
-        done = _driver_components(edges, records, checkpoint_dir)
+    strings = all(t == StringType() for t in id_types)
+    # the threshold in bytes, as the planner reads it; -1 turns
+    # broadcasting, and so the driver finish, off
+    conf = links.sparkSession._jsparkSession.sessionState().conf()
+    budget = int(conf.autoBroadcastJoinThreshold())
+    if algorithm == "star" and budget > 0 and (integral or strings):
+        # materialized by the size probe's job; the collect, or the
+        # rounds and the factorize below, read it instead of running
+        # the caller's plan again
+        edges = edges.localCheckpoint(eager=False)
+        done = _driver_components(edges, records, checkpoint_dir, budget)
         if done is not None:
             return done
     if integral:
@@ -227,37 +242,33 @@ def _min_roots(cu: np.ndarray, cv: np.ndarray, n: int) -> np.ndarray:
 
 
 def _driver_components(
-    edges: DataFrame, records: DataFrame | None, checkpoint_dir: str | None
+    edges: DataFrame, records: DataFrame | None, checkpoint_dir: str | None, budget: int
 ) -> DataFrame | None:
     """The star fixed point solved on the driver, or None when the
-    edge set is over the broadcast budget (rows or Arrow bytes).
+    edge set is over ``budget`` bytes.
 
-    Collects at most ``budget // _EDGE_BYTES + 1`` edges — one job —
-    so the driver never holds more than the threshold allows before
-    deciding.  Output rows are exactly ``connected_components``':
-    labels for every endpoint (a NULL endpoint yields the same
-    ``(NULL, NULL)`` row the Spark paths emit), or ``records``
-    completed by the shared left-join + coalesce."""
+    The size is measured by one aggregate (edge count and string
+    bytes) before anything is collected, so the driver never holds
+    an edge set over the budget.  Output rows are exactly
+    ``connected_components``': labels for every endpoint (a NULL
+    endpoint yields the same ``(NULL, NULL)`` row the Spark paths
+    emit), or ``records`` completed by the shared left-join +
+    coalesce."""
     import pandas as pd
     import pyarrow as pa
 
     spark = edges.sparkSession
-    # the threshold in bytes, as the planner reads it; -1 turns
-    # broadcasting, and so the driver finish, off
-    budget = int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
-    cap = budget // _EDGE_BYTES
-    if cap <= 0:
+    if edges.schema[_U].dataType == StringType():
+        text = F.coalesce(F.octet_length(_U), F.lit(0)) + F.coalesce(F.octet_length(_V), F.lit(0))
+    else:
+        text = F.lit(0)
+    size = edges.agg(F.count(F.lit(1)).alias("n"), F.sum(text).alias("text")).collect()[0]
+    if size["n"] * _EDGE_BYTES + (size["text"] or 0) > budget:
         return None
     # one id type for both columns (Spark's union widening), so the
     # factorize sees one column and the labels keep the rounds' type
     id_type = edges.select(_U).union(edges.select(_V)).schema[0].dataType
-    tbl = (
-        edges.select(F.col(_U).cast(id_type), F.col(_V).cast(id_type))
-        .limit(cap + 1)
-        .toArrow()
-    )
-    if tbl.num_rows > cap or tbl.nbytes > budget:
-        return None
+    tbl = edges.select(F.col(_U).cast(id_type), F.col(_V).cast(id_type)).toArrow()
 
     ends = pd.concat(
         [tbl.column(c).to_pandas(types_mapper=pd.ArrowDtype) for c in (_U, _V)],

@@ -23,7 +23,8 @@ Plan shape: two hash joins to find touched components (shuffles sized
 by the NEW batch), one semi/anti-join partition of the assignment
 table, then CC over touched+new only.  That subgraph usually fits the
 broadcast budget, so ``connected_components`` solves it on the driver
-in one collect; a bigger one runs the large-star/small-star rounds.
+after one size probe and one collect; a bigger one runs the
+large-star/small-star rounds.
 """
 
 from __future__ import annotations

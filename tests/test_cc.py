@@ -199,8 +199,8 @@ def test_threshold_below_graph_size_runs_rounds(spark, tmp_path):
     pairs = [(i, i + 1) for i in range(0, 60, 3)] + [(5, 50), (50, 51)]
     links = edges_df(spark, pairs)
     runs = {}
-    # the row cap is threshold // 16 (one edge of two longs): one byte
-    # short of len(pairs) edges must fall through, 4x over must not
+    # an edge of two longs counts 16 bytes: one byte short of
+    # len(pairs) edges must fall through, 4x over must not
     for name, threshold in (("below", 16 * len(pairs) - 1), ("above", 64 * len(pairs))):
         ckpt = tmp_path / name
         with broadcast_threshold(spark, str(threshold)):
@@ -213,17 +213,51 @@ def test_threshold_below_graph_size_runs_rounds(spark, tmp_path):
     assert runs["above_files"] == {"driver.parquet"}
 
 
-def test_arrow_bytes_over_threshold_runs_rounds(spark, tmp_path):
-    # few rows (under the row cap) but long ids: the Arrow size decides
+def test_string_bytes_over_threshold_runs_rounds_without_collect(
+    spark, tmp_path, monkeypatch
+):
+    # few edges (16 bytes each fits the threshold) but long ids: the
+    # string bytes decide, and the edges never reach the driver
     pad = "x" * 200
     pairs = [(f"{pad}{i}", f"{pad}{i + 1}") for i in range(0, 20, 2)]
     links = spark.createDataFrame(pairs, "record_id_l string, record_id_r string")
+    want = _rows(connected_components(links, algorithm="star"))
+
+    def no_collect(self):
+        raise AssertionError("edges collected over the byte budget")
+
+    monkeypatch.setattr(type(links), "toArrow", no_collect)
     with broadcast_threshold(spark, str(16 * 2 * len(pairs))):
         got = _rows(
             connected_components(links, algorithm="star", checkpoint_dir=str(tmp_path))
         )
     assert "star_0.parquet" in os.listdir(tmp_path)
-    assert got == _rows(connected_components(links, algorithm="star"))
+    assert got == want
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_links_plan_runs_once_over_budget(spark, id_type):
+    """Over the budget, the size probe and the rounds (and the string
+    factorize, which reads the edges twice) share one run of the
+    caller's plan."""
+    from pyspark.sql import functions as F
+
+    n = 12
+    acc = spark.sparkContext.accumulator(0)
+
+    def seen(x):
+        acc.add(1)
+        return x
+
+    links = edges_df(spark, [(i, i + 1) for i in range(n)]).select(
+        F.udf(seen, id_type).asNondeterministic()(F.col("record_id_l").cast(id_type))
+        .alias("record_id_l"),
+        F.col("record_id_r").cast(id_type).alias("record_id_r"),
+    )
+    with broadcast_threshold(spark, str(16 * n - 1)):
+        got = get_clusters(connected_components(links, algorithm="star"))
+    assert len(got) == 1
+    assert acc.value == n
 
 
 def test_min_roots_matches_loop_union_find():
