@@ -40,6 +40,8 @@ budget — the rounds all read one materialization of the caller's plan.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
@@ -124,10 +126,7 @@ def connected_components(
         id_types.append(records.schema["record_id"].dataType)
     integral = all(isinstance(t, _INTEGRAL) for t in id_types)
     strings = all(t == StringType() for t in id_types)
-    # the threshold in bytes, as the planner reads it; -1 turns
-    # broadcasting, and so the driver finish, off
-    conf = links.sparkSession._jsparkSession.sessionState().conf()
-    budget = int(conf.autoBroadcastJoinThreshold())
+    budget = _broadcast_budget(links.sparkSession)
     if algorithm == "star" and budget > 0 and (integral or strings):
         # materialized by the size probe's job; the collect, or the
         # rounds and the factorize below, read it instead of running
@@ -205,6 +204,12 @@ def connected_components(
     return records.select("record_id").join(out, "record_id", "left")
 
 
+def _broadcast_budget(spark) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, as the planner
+    reads it; -1 turns broadcasting, and so every driver finish, off."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+
+
 def _label_all(base: DataFrame, labels: DataFrame) -> DataFrame:
     """Every ``base`` record_id with its label; records ``labels`` does
     not mention are singletons (their own minimum)."""
@@ -241,6 +246,41 @@ def _min_roots(cu: np.ndarray, cv: np.ndarray, n: int) -> np.ndarray:
         np.minimum.at(parent, pv, lo)
 
 
+def _solve_edges(
+    u: pa.ChunkedArray, v: pa.ChunkedArray
+) -> tuple[np.ndarray, np.ndarray, pa.Array, np.ndarray]:
+    """Components of the edges ``(u, v)`` (Arrow id columns of one type)
+    on the driver → ``(cu, cv, ids, roots)``: ``ids`` holds every
+    distinct non-NULL id in id order, ``cu``/``cv`` each edge's codes
+    into it (NULL → -1; such an edge joins nothing) and ``roots`` each
+    id's component root, the code of its component's minimum id."""
+    ends = pd.concat(
+        [c.to_pandas(types_mapper=pd.ArrowDtype) for c in (u, v)], ignore_index=True
+    )
+    # sort=True: code order is id order, so the root code (the smallest
+    # in its component) decodes to the minimum id
+    codes, uniques = pd.factorize(ends, sort=True)
+    codes = np.asarray(codes, dtype=np.int64)
+    cu, cv = codes[: len(u)], codes[len(u) :]
+    keep = (cu >= 0) & (cv >= 0)
+    ids = pa.array(uniques, type=u.type)
+    return cu, cv, ids, _min_roots(cu[keep], cv[keep], len(ids))
+
+
+def _labels_frame(
+    spark, ids: pa.Array, comps: pa.Array, id_type, nulls: bool
+) -> DataFrame:
+    """``(record_id, component)`` rows solved on the driver as a local
+    DataFrame of ``id_type``; ``nulls`` adds the ``(NULL, NULL)`` row
+    the Spark paths emit for a NULL endpoint."""
+    if nulls:
+        ids = pa.concat_arrays([ids, pa.nulls(1, ids.type)])
+        comps = pa.concat_arrays([comps, pa.nulls(1, ids.type)])
+    solved = pa.table({"record_id": ids, "component": comps})
+    schema = f"record_id {id_type.simpleString()}, component {id_type.simpleString()}"
+    return spark.createDataFrame(solved, schema=schema)
+
+
 def _driver_components(
     edges: DataFrame, records: DataFrame | None, checkpoint_dir: str | None, budget: int
 ) -> DataFrame | None:
@@ -254,9 +294,6 @@ def _driver_components(
     endpoint yields the same ``(NULL, NULL)`` row the Spark paths
     emit), or ``records`` completed by the shared left-join +
     coalesce."""
-    import pandas as pd
-    import pyarrow as pa
-
     spark = edges.sparkSession
     if edges.schema[_U].dataType == StringType():
         text = F.coalesce(F.octet_length(_U), F.lit(0)) + F.coalesce(F.octet_length(_V), F.lit(0))
@@ -270,25 +307,9 @@ def _driver_components(
     id_type = edges.select(_U).union(edges.select(_V)).schema[0].dataType
     tbl = edges.select(F.col(_U).cast(id_type), F.col(_V).cast(id_type)).toArrow()
 
-    ends = pd.concat(
-        [tbl.column(c).to_pandas(types_mapper=pd.ArrowDtype) for c in (_U, _V)],
-        ignore_index=True,
-    )
-    # sort=True: code order is id order, so the root code (the smallest
-    # in its component) decodes to the minimum record_id; NULL → -1
-    codes, uniques = pd.factorize(ends, sort=True)
-    codes = np.asarray(codes, dtype=np.int64)
-    cu, cv = codes[: tbl.num_rows], codes[tbl.num_rows :]
-    keep = (cu >= 0) & (cv >= 0)
-    ids = pa.array(uniques, type=tbl.schema.field(_U).type)
-    roots = _min_roots(cu[keep], cv[keep], len(ids))
-    comps = ids.take(pa.array(roots))
-    if records is None and (codes < 0).any():
-        ids = pa.concat_arrays([ids, pa.nulls(1, ids.type)])
-        comps = pa.concat_arrays([comps, pa.nulls(1, ids.type)])
-    solved = pa.table({"record_id": ids, "component": comps})
-    schema = f"record_id {id_type.simpleString()}, component {id_type.simpleString()}"
-    labels = spark.createDataFrame(solved, schema=schema)
+    cu, cv, ids, roots = _solve_edges(tbl.column(_U), tbl.column(_V))
+    nulls = records is None and bool((cu < 0).any() or (cv < 0).any())
+    labels = _labels_frame(spark, ids, ids.take(pa.array(roots)), id_type, nulls)
     if checkpoint_dir is not None:
         labels = _chk(labels, checkpoint_dir, "driver")
     if records is None:

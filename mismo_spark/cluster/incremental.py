@@ -19,20 +19,42 @@ untouched component's min cannot change, and the sub-CC re-derives the
 min over every merged group.  ``incremental == from-scratch`` is
 asserted literally in tests/test_incremental_cc.py.
 
-Plan shape: two hash joins to find touched components (shuffles sized
-by the NEW batch), one semi/anti-join partition of the assignment
-table, then CC over touched+new only.  That subgraph usually fits the
-broadcast budget, so ``connected_components`` solves it on the driver
-after one size probe and one collect; a bigger one runs the
-large-star/small-star rounds.
+Plan shape: with ``algorithm="star"``, integral ids and a batch that
+fits ``spark.sql.autoBroadcastJoinThreshold``, the fold runs in one
+driver pass.  The batch's links and new record ids are collected once
+as Arrow; the touched components' rows are collected by one query (a
+broadcast semi-join of the batch's ids against ``assignments``, then a
+semi-join on the touched components); the sub-graph is solved by the
+same union-find as ``connected_components``' driver finish; and the
+result is ``assignments`` anti-joined against the solved ids plus the
+solved rows.  Each collect is capped at ``threshold // 16`` rows of two
+fixed-width ids, so the driver holds no more than the threshold per
+collect.  A batch or a touched set that reaches the cap, a threshold
+of ``-1``, string ids and ``naive`` take the Spark path: two hash joins
+to find touched components (shuffles sized by the NEW batch), one
+semi/anti-join partition of the assignment table, then
+``connected_components`` over touched+new only.  Either way the
+caller's links plan runs once.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mismo_spark.cluster.cc import connected_components
+from mismo_spark.cluster.cc import (
+    _EDGE_BYTES,
+    _INTEGRAL,
+    _broadcast_budget,
+    _labels_frame,
+    _solve_edges,
+    connected_components,
+)
 from mismo_spark.types.linkage import ID_L, ID_R
 
 
@@ -54,14 +76,26 @@ def incremental_components(
     to each other, to old records, or old components to old components.
     ``new_records`` (optional, column ``record_id``) adds singleton
     rows for genuinely new records that no new link mentions.
+
+    With ``algorithm="star"`` and a batch that fits the broadcast
+    threshold the fold is solved on the driver (see the module
+    docstring); ``max_iter`` and ``checkpoint_dir`` then go unused, as
+    they reach only the Spark path's sub-graph CC.
     """
     # materialize the batch-sized relations once — the whole point of
     # the incremental fold is that everything except `assignments` is
     # sized by the NEW batch, so checkpointing is cheap while
     # re-executing the batch's upstream plan (often a scoring pipeline)
     # per consumer is not.  `assignments` itself is corpus-sized and
-    # typically already a parquet checkpoint, so it stays lazy.
-    nl = new_links.select(ID_L, ID_R).localCheckpoint(eager=True)
+    # typically already a parquet checkpoint, so it stays lazy.  The
+    # links checkpoint is filled by its first reader: the driver fold's
+    # collect, or the `ends` checkpoint below.
+    nl = new_links.select(ID_L, ID_R).localCheckpoint(eager=False)
+    budget = _broadcast_budget(nl.sparkSession)
+    if algorithm == "star" and budget > 0:
+        done = _driver_fold(assignments, nl, new_records, budget)
+        if done is not None:
+            return done
     ends = nl.select(
         F.explode(F.array(F.col(ID_L), F.col(ID_R))).alias("record_id")
     ).distinct()
@@ -77,7 +111,9 @@ def incremental_components(
     touched = assignments.join(
         touched_comps, "component", "left_semi"
     ).localCheckpoint(eager=True)
-    untouched = assignments.join(touched_comps, "component", "left_anti")
+    untouched = assignments.join(touched_comps, "component", "left_anti").select(
+        "record_id", "component"
+    )
 
     # a touched component re-enters as its star edges — connectivity
     # (and therefore the merged components) is preserved exactly
@@ -93,3 +129,81 @@ def incremental_components(
         checkpoint_dir=checkpoint_dir,
     )
     return untouched.unionByName(sub)
+
+
+def _driver_fold(
+    assignments: DataFrame,
+    nl: DataFrame,
+    new_records: DataFrame | None,
+    budget: int,
+) -> DataFrame | None:
+    """The fold solved on the driver, or None: before anything is
+    collected for non-integral ids, or when a collect, capped at
+    ``budget // 16`` rows, comes back full (so the driver never holds
+    more than ``budget`` bytes of ids in one collect)."""
+    cols = [nl.select(ID_L), nl.select(ID_R), assignments.select("record_id")]
+    cols.append(assignments.select("component"))
+    if new_records is not None:
+        cols.append(new_records.select("record_id"))
+    if not all(isinstance(c.schema[0].dataType, _INTEGRAL) for c in cols):
+        return None
+    # one integral type for every id (Spark's union widening): at most
+    # 8 bytes, so `cap` rows of two ids are at most `budget` bytes
+    id_type = reduce(DataFrame.union, cols).schema[0].dataType
+    cap = budget // _EDGE_BYTES
+    spark = nl.sparkSession
+
+    def pairs(df: DataFrame, u: str, v: str) -> DataFrame:
+        return df.select(
+            F.col(u).cast(id_type).alias(ID_L), F.col(v).cast(id_type).alias(ID_R)
+        )
+
+    batch = pairs(nl, ID_L, ID_R)
+    if new_records is not None:
+        # a new record enters as a self-loop: a node that joins nothing
+        batch = batch.unionByName(pairs(new_records, "record_id", "record_id"))
+    links = batch.limit(cap).toArrow()
+    if links.num_rows >= cap:
+        return None
+    if links.num_rows == 0:
+        return assignments.select("record_id", "component")
+
+    ends = pc.unique(
+        pa.chunked_array(links.column(ID_L).chunks + links.column(ID_R).chunks)
+    ).drop_null()
+    ends = spark.createDataFrame(
+        pa.table({"record_id": ends}), f"record_id {id_type.simpleString()}"
+    )
+    touched_comps = assignments.join(
+        F.broadcast(ends), "record_id", "left_semi"
+    ).select("component")
+    touched = pairs(
+        assignments.join(F.broadcast(touched_comps), "component", "left_semi"),
+        "record_id",
+        "component",
+    )
+    rows = touched.limit(cap).toArrow()
+    if rows.num_rows >= cap:
+        return None
+
+    # a touched component re-enters as its star edges, as on the Spark
+    # path; the output is the batch's ids and the touched records
+    cu, cv, ids, roots = _solve_edges(
+        pa.chunked_array(links.column(ID_L).chunks + rows.column(ID_L).chunks),
+        pa.chunked_array(links.column(ID_R).chunks + rows.column(ID_R).chunks),
+    )
+    out = np.concatenate([cu, cv[: links.num_rows]])
+    keep = np.unique(out[out >= 0])
+    solved = _labels_frame(
+        spark,
+        ids.take(pa.array(keep)),
+        ids.take(pa.array(roots[keep])),
+        id_type,
+        nulls=bool((out < 0).any()),
+    )
+    untouched = assignments.join(
+        F.broadcast(solved.select("record_id")), "record_id", "left_anti"
+    )
+    # a local relation is split over up to defaultParallelism partitions,
+    # each a file when the caller writes the result
+    return untouched.unionByName(solved.coalesce(1))

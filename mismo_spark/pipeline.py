@@ -6,7 +6,8 @@ provided weights) → odds threshold → connected components → clusters.
 
 Every stage checkpoints to parquet (Iceberg-shaped) under ``work_dir``
 with a manifest entry carrying the stage's row count, input
-fingerprint, and per-partition counters — a resumed run replays
+fingerprint (the stage's parameters chained onto ``input_identity`` of
+the pages), and per-partition counters — a resumed run replays
 completed stages from disk and recomputes only what's missing
 ("resumable from any checkpointed stage", BASELINE.json north_rule).
 mismo's analogue is per-stage ``Linkage.to_parquets``
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from dataclasses import dataclass, field
 
@@ -44,6 +46,33 @@ def normalized_domain(url_col) -> F.Column:
     host = F.regexp_extract(url_col, r"^[a-z]+://([^/]+)", 1)
     host = F.lower(F.regexp_replace(host, r"^www\.", ""))
     return host
+
+
+def input_identity(pages: DataFrame) -> list:
+    """What a run reads, in a form that is the same in every session:
+    each input file with its size and modification time (a driver-side
+    stat, no Spark job) and the input plan's text, which carries its
+    filters (``--lang``) and projections.
+
+    Input that is not all files (in-memory or generated data) has no
+    identity that holds across sessions; Spark's plan hash, added for
+    it, holds within one, so such a run resumes only in the session
+    that wrote its checkpoints."""
+    spark = pages.sparkSession
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    files = []
+    for name in sorted(pages.inputFiles()):
+        path = spark._jvm.org.apache.hadoop.fs.Path(name)
+        status = path.getFileSystem(conf).getFileStatus(path)
+        files.append((name, status.getLen(), status.getModificationTime()))
+    plan = pages._jdf.queryExecution().analyzed()
+    # expression ids (`lang#12`) are numbered per session
+    identity = [files, re.sub(r"#\d+", "", plan.toString())]
+    leaves = plan.collectLeaves()
+    kinds = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.length())}
+    if kinds != {"LogicalRelation"}:
+        identity.append(pages.semanticHash())
+    return identity
 
 
 def pair_features(pairs: DataFrame) -> DataFrame:
@@ -323,8 +352,12 @@ class DedupePipeline:
     def run(self, spark: SparkSession, pages: DataFrame) -> DataFrame:
         """→ DataFrame(record_id, component)."""
         # v3: tokens/shingles string columns dropped from the records
-        # schema (hashes only) — stale v2 checkpoints must not be reused
-        fp_records = self._fp("records", "v3", self.keep_latest_snapshots)
+        # schema (hashes only) — stale v2 checkpoints must not be reused.
+        # The input identity keeps a resume from replaying stages built
+        # from other pages (or another filter) in the same work_dir.
+        fp_records = self._fp(
+            "records", "v3", self.keep_latest_snapshots, input_identity(pages)
+        )
         records = self._stage(
             spark, "01_records", fp_records, lambda: self.prepare_records(pages)
         )

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import math
 import os
+from contextlib import contextmanager, nullcontext
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import DataFrame
@@ -32,6 +34,56 @@ def spark():
     )
     yield s
     s.stop()
+
+
+_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextmanager
+def broadcast_threshold(spark, value: str):
+    old = spark.conf.get(_THRESHOLD)
+    spark.conf.set(_THRESHOLD, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(_THRESHOLD, old)
+
+
+@pytest.fixture
+def folds(monkeypatch):
+    """Results of every driver fold ``incremental_components`` tries
+    (None where it gave the fold up to the Spark path)."""
+    from mismo_spark.cluster import incremental
+
+    seen = []
+    fold = incremental._driver_fold
+
+    def spy(*args):
+        seen.append(fold(*args))
+        return seen[-1]
+
+    monkeypatch.setattr(incremental, "_driver_fold", spy)
+    return seen
+
+
+@pytest.fixture
+def fold(request, spark, folds):
+    """``with fold.run():`` runs ``incremental_components`` on one path:
+    "driver" unless parametrized indirectly with "spark".  "driver" is
+    the default threshold, where every fold of these small batches must
+    be solved on the driver, unless the test sets ``fold.driver =
+    False`` (ids the fold does not take).  "spark" is a threshold of
+    -1, where the driver fold is never tried."""
+    spark_path = getattr(request, "param", "driver") == "spark"
+    path = SimpleNamespace(
+        driver=True,
+        run=lambda: broadcast_threshold(spark, "-1") if spark_path else nullcontext(),
+    )
+    yield path
+    if spark_path:
+        assert not folds
+    else:
+        assert folds and all((r is not None) == path.driver for r in folds)
 
 
 @pytest.fixture

@@ -5,27 +5,15 @@ from __future__ import annotations
 
 import os
 import random
-from contextlib import contextmanager
 
 import pytest
 
 from mismo_spark import connected_components
-from tests.conftest import get_clusters
+from tests.conftest import broadcast_threshold, get_clusters
 
 # "star" takes the driver finish on these small graphs; "star-rounds"
 # is star with broadcasting off, so the large-star/small-star rounds run
 ALGOS = ["naive", "star", "star-rounds"]
-_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
-
-
-@contextmanager
-def broadcast_threshold(spark, value: str):
-    old = spark.conf.get(_THRESHOLD)
-    spark.conf.set(_THRESHOLD, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(_THRESHOLD, old)
 
 
 @pytest.fixture

@@ -1,9 +1,11 @@
-"""Streaming cluster maintenance: live assignment == full recompute."""
+"""Streaming cluster maintenance: live assignment == full recompute,
+with each micro-batch folded on the driver and on the Spark path."""
 
 from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from mismo_spark.cluster.cc import connected_components
@@ -20,7 +22,7 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def test_incremental_cluster_stream(spark, tmp_path):
+def test_incremental_cluster_stream(spark, tmp_path, fold):
     corpus = _df(spark, [(1, "a"), (2, "b")])
     seed_assign = corpus.select(
         "record_id", F.col("record_id").alias("component")
@@ -33,18 +35,19 @@ def test_incremental_cluster_stream(spark, tmp_path):
     _df(spark, batch2).coalesce(1).write.mode("append").parquet(incoming)
 
     state_dir = str(tmp_path / "state")
-    q = incremental_cluster_stream(
-        spark,
-        input_dir=incoming,
-        key_columns=["key"],
-        state_dir=state_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        corpus=corpus,
-        initial_assignments=seed_assign,
-        schema=_df(spark, []).schema,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(300)
+    with fold.run():
+        q = incremental_cluster_stream(
+            spark,
+            input_dir=incoming,
+            key_columns=["key"],
+            state_dir=state_dir,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            corpus=corpus,
+            initial_assignments=seed_assign,
+            schema=_df(spark, []).schema,
+            max_files_per_trigger=1,
+        )
+        q.awaitTermination(300)
 
     got = {
         r["record_id"]: r["component"]
@@ -62,7 +65,7 @@ def test_incremental_cluster_stream(spark, tmp_path):
     assert want == {1: 1, 10: 1, 21: 1, 2: 2, 20: 2, 11: 11, 12: 11, 30: 30}
 
 
-def test_incremental_cluster_stream_no_seed(spark, tmp_path):
+def test_incremental_cluster_stream_no_seed(spark, tmp_path, fold):
     incoming = str(tmp_path / "incoming")
     _df(spark, [(5, "k"), (6, "k"), (7, "z")]).coalesce(1).write.mode(
         "append"
@@ -70,17 +73,28 @@ def test_incremental_cluster_stream_no_seed(spark, tmp_path):
 
     state_dir = str(tmp_path / "state")
     assert read_assignments(spark, state_dir) is None
-    q = incremental_cluster_stream(
-        spark,
-        input_dir=incoming,
-        key_columns=["key"],
-        state_dir=state_dir,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        schema=_df(spark, []).schema,
-    )
-    q.awaitTermination(300)
+    with fold.run():
+        q = incremental_cluster_stream(
+            spark,
+            input_dir=incoming,
+            key_columns=["key"],
+            state_dir=state_dir,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            schema=_df(spark, []).schema,
+        )
+        q.awaitTermination(300)
     got = {
         r["record_id"]: r["component"]
         for r in read_assignments(spark, state_dir).collect()
     }
     assert got == {5: 5, 6: 5, 7: 7}
+
+
+@pytest.mark.parametrize("fold", ["spark"], indirect=True)
+@pytest.mark.parametrize(
+    "case",
+    [test_incremental_cluster_stream, test_incremental_cluster_stream_no_seed],
+    ids=["seeded", "no-seed"],
+)
+def test_stream_on_spark_path(spark, tmp_path, fold, case):
+    case(spark, tmp_path, fold)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from mismo_spark.cluster.metrics import pairwise_prf
 from mismo_spark.corpus import extract_text, make_corpus
-from mismo_spark.pipeline import DedupePipeline, normalized_domain
+from mismo_spark.pipeline import DedupePipeline, input_identity, normalized_domain
 
 
 @pytest.fixture(scope="module")
@@ -82,6 +82,32 @@ def test_pipeline_resume_identical(spark, corpus, tmp_path):
         assert stage in manifest["stages"]
         assert manifest["stages"][stage]["rows"] > 0
         assert manifest["stages"][stage]["partition_counts"]
+
+
+def test_resume_checks_its_input(spark, tmp_path):
+    """Other pages, or the same pages under another filter, in the same
+    work_dir: no stage of the earlier input is replayed."""
+    paths = [str(tmp_path / f"pages{seed}") for seed in (1, 2)]
+    for seed, path in enumerate(paths, 1):
+        make_corpus(spark, 40, seed=seed, skew_every=0).drop("label_true").write.parquet(path)
+    work = str(tmp_path / "work")
+
+    def run(work_dir, pages):
+        out = DedupePipeline(work_dir=work_dir, seed=42).run(spark, pages)
+        return {(r["record_id"], r["component"]) for r in out.collect()}
+
+    # the identity of the same files does not hang on the DataFrame
+    assert input_identity(spark.read.parquet(paths[0])) == input_identity(
+        spark.read.parquet(paths[0])
+    )
+    run(work, spark.read.parquet(paths[0]))
+    second = spark.read.parquet(paths[1])
+    assert run(work, second) == run(str(tmp_path / "fresh"), second)
+    # the filter is part of the input: every record and only those
+    english = second.filter(F.col("lang") == "en")
+    want = {r["url"] for r in english.select("url").collect()}
+    assert 0 < len(want) < second.count()
+    assert {rid for rid, _ in run(work, english)} == want
 
 
 def test_pipeline_skew_split_identical_clusters(spark, corpus, tmp_path):
