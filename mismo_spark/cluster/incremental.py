@@ -19,22 +19,24 @@ untouched component's min cannot change, and the sub-CC re-derives the
 min over every merged group.  ``incremental == from-scratch`` is
 asserted literally in tests/test_incremental_cc.py.
 
-Plan shape: with ``algorithm="star"``, integral ids and a batch that
-fits ``spark.sql.autoBroadcastJoinThreshold``, the fold runs in one
-driver pass.  The batch's links and new record ids are collected once
-as Arrow; the touched components' rows are collected by one query (a
-broadcast semi-join of the batch's ids against ``assignments``, then a
-semi-join on the touched components); the sub-graph is solved by the
-same union-find as ``connected_components``' driver finish; and the
-result is ``assignments`` anti-joined against the solved ids plus the
-solved rows.  Each collect is capped at ``threshold // 16`` rows of two
-fixed-width ids, so the driver holds no more than the threshold per
-collect.  A batch or a touched set that reaches the cap, a threshold
-of ``-1``, string ids and ``naive`` take the Spark path: two hash joins
-to find touched components (shuffles sized by the NEW batch), one
-semi/anti-join partition of the assignment table, then
-``connected_components`` over touched+new only.  Either way the
-caller's links plan runs once.
+Plan shape: with ``algorithm="star"`` and integral ids, the batch's
+links and new record ids are collected once as Arrow, capped at
+``threshold // 16`` rows of two fixed-width ids, so the driver holds no
+more than ``spark.sql.autoBroadcastJoinThreshold`` per collect.  When
+the batch fits, its ids go back as a broadcast relation, and one query
+finds the touched components' rows (a broadcast semi-join of the ids
+against ``assignments``, then one on the touched components); that
+query is collected under the same cap, solved by the same union-find
+as ``connected_components``' driver finish, and the result is
+``assignments`` anti-joined against the solved ids plus the solved
+rows.  Touched rows that reach the cap go on to the Spark path below
+from the same broadcast relations, reading the touched rows the
+collect already checkpointed.  A batch that reaches the cap, a
+threshold of ``-1``, string ids and ``naive`` find the touched
+components with two hash joins (shuffles sized by the NEW batch)
+instead.  The Spark path then partitions the assignment table with
+one semi/anti-join and runs ``connected_components`` over touched+new
+only.  Either way the caller's links plan runs once.
 """
 
 from __future__ import annotations
@@ -77,10 +79,11 @@ def incremental_components(
     ``new_records`` (optional, column ``record_id``) adds singleton
     rows for genuinely new records that no new link mentions.
 
-    With ``algorithm="star"`` and a batch that fits the broadcast
-    threshold the fold is solved on the driver (see the module
-    docstring); ``max_iter`` and ``checkpoint_dir`` then go unused, as
-    they reach only the Spark path's sub-graph CC.
+    With ``algorithm="star"``, integral ids, and a batch and touched
+    components that each fit the broadcast threshold, the fold is
+    solved on the driver (see the module docstring); ``max_iter`` and
+    ``checkpoint_dir`` then go unused, as they reach only the Spark
+    path's sub-graph CC.
     """
     # materialize the batch-sized relations once — the whole point of
     # the incremental fold is that everything except `assignments` is
@@ -88,29 +91,49 @@ def incremental_components(
     # re-executing the batch's upstream plan (often a scoring pipeline)
     # per consumer is not.  `assignments` itself is corpus-sized and
     # typically already a parquet checkpoint, so it stays lazy.  The
-    # links checkpoint is filled by its first reader: the driver fold's
+    # links checkpoint is filled by its first reader: the batch's
     # collect, or the `ends` checkpoint below.
     nl = new_links.select(ID_L, ID_R).localCheckpoint(eager=False)
-    budget = _broadcast_budget(nl.sparkSession)
-    if algorithm == "star" and budget > 0:
-        done = _driver_fold(assignments, nl, new_records, budget)
+    spark = nl.sparkSession
+    cap = _broadcast_budget(spark) // _EDGE_BYTES
+    id_type = _fold_id_type(assignments, nl, new_records) if algorithm == "star" else None
+    batch = None
+    if id_type is not None and cap > 0:
+        batch = _collect_batch(nl, new_records, id_type, cap)
+    if batch is None:
+        ends = nl.select(
+            F.explode(F.array(F.col(ID_L), F.col(ID_R))).alias("record_id")
+        ).distinct()
+        if new_records is not None:
+            ends = ends.unionByName(new_records.select("record_id")).distinct()
+        ends = ends.localCheckpoint(eager=True)
+    else:
+        # the batch's ids are already on the driver: they go back as a
+        # local relation, and the touched components (at most one per
+        # id, so no more bytes than the batch) are broadcast too
+        ids = pa.chunked_array(batch.column(ID_L).chunks + batch.column(ID_R).chunks)
+        ends = F.broadcast(
+            spark.createDataFrame(
+                pa.table({"record_id": pc.unique(ids)}),
+                f"record_id {id_type.simpleString()}",
+            )
+        )
+
+    touched_comps = assignments.join(ends, "record_id", "left_semi").select(
+        "component"
+    )
+    touched_comps = (
+        touched_comps.distinct() if batch is None else F.broadcast(touched_comps)
+    )
+    touched = assignments.join(touched_comps, "component", "left_semi")
+    if batch is None:
+        touched = touched.localCheckpoint(eager=True)
+    else:
+        # filled by the fold's collect, which a give-up then reuses
+        touched = touched.localCheckpoint(eager=False)
+        done = _driver_fold(assignments, batch, touched, id_type, cap)
         if done is not None:
             return done
-    ends = nl.select(
-        F.explode(F.array(F.col(ID_L), F.col(ID_R))).alias("record_id")
-    ).distinct()
-    if new_records is not None:
-        ends = ends.unionByName(new_records.select("record_id")).distinct()
-    ends = ends.localCheckpoint(eager=True)
-
-    touched_comps = (
-        assignments.join(ends, "record_id", "left_semi")
-        .select("component")
-        .distinct()
-    )
-    touched = assignments.join(
-        touched_comps, "component", "left_semi"
-    ).localCheckpoint(eager=True)
     untouched = assignments.join(touched_comps, "component", "left_anti").select(
         "record_id", "component"
     )
@@ -131,58 +154,49 @@ def incremental_components(
     return untouched.unionByName(sub)
 
 
-def _driver_fold(
-    assignments: DataFrame,
-    nl: DataFrame,
-    new_records: DataFrame | None,
-    budget: int,
-) -> DataFrame | None:
-    """The fold solved on the driver, or None: before anything is
-    collected for non-integral ids, or when a collect, capped at
-    ``budget // 16`` rows, comes back full (so the driver never holds
-    more than ``budget`` bytes of ids in one collect)."""
+def _fold_id_type(
+    assignments: DataFrame, nl: DataFrame, new_records: DataFrame | None
+):
+    """The one integral type every id widens to (as Spark's union
+    does), or None when an id is not integral and the fold is not
+    tried.  At most 8 bytes, so a row of two ids is at most 16."""
     cols = [nl.select(ID_L), nl.select(ID_R), assignments.select("record_id")]
     cols.append(assignments.select("component"))
     if new_records is not None:
         cols.append(new_records.select("record_id"))
     if not all(isinstance(c.schema[0].dataType, _INTEGRAL) for c in cols):
         return None
-    # one integral type for every id (Spark's union widening): at most
-    # 8 bytes, so `cap` rows of two ids are at most `budget` bytes
-    id_type = reduce(DataFrame.union, cols).schema[0].dataType
-    cap = budget // _EDGE_BYTES
-    spark = nl.sparkSession
+    return reduce(DataFrame.union, cols).schema[0].dataType
 
-    def pairs(df: DataFrame, u: str, v: str) -> DataFrame:
-        return df.select(
-            F.col(u).cast(id_type).alias(ID_L), F.col(v).cast(id_type).alias(ID_R)
-        )
 
-    batch = pairs(nl, ID_L, ID_R)
+def _pairs(df: DataFrame, u: str, v: str, id_type) -> DataFrame:
+    return df.select(
+        F.col(u).cast(id_type).alias(ID_L), F.col(v).cast(id_type).alias(ID_R)
+    )
+
+
+def _collect_batch(
+    nl: DataFrame, new_records: DataFrame | None, id_type, cap: int
+) -> pa.Table | None:
+    """The batch's links, plus one self-loop per new record (a node
+    that joins nothing), as Arrow; None when ``cap`` rows come back, so
+    the driver never holds more than the broadcast budget."""
+    batch = _pairs(nl, ID_L, ID_R, id_type)
     if new_records is not None:
-        # a new record enters as a self-loop: a node that joins nothing
-        batch = batch.unionByName(pairs(new_records, "record_id", "record_id"))
+        batch = batch.unionByName(_pairs(new_records, "record_id", "record_id", id_type))
     links = batch.limit(cap).toArrow()
-    if links.num_rows >= cap:
-        return None
+    return links if links.num_rows < cap else None
+
+
+def _driver_fold(
+    assignments: DataFrame, links: pa.Table, touched: DataFrame, id_type, cap: int
+) -> DataFrame | None:
+    """The fold solved on the driver from the collected batch, or None
+    when the touched rows, capped at ``cap`` (``budget // 16``), come
+    back full."""
     if links.num_rows == 0:
         return assignments.select("record_id", "component")
-
-    ends = pc.unique(
-        pa.chunked_array(links.column(ID_L).chunks + links.column(ID_R).chunks)
-    ).drop_null()
-    ends = spark.createDataFrame(
-        pa.table({"record_id": ends}), f"record_id {id_type.simpleString()}"
-    )
-    touched_comps = assignments.join(
-        F.broadcast(ends), "record_id", "left_semi"
-    ).select("component")
-    touched = pairs(
-        assignments.join(F.broadcast(touched_comps), "component", "left_semi"),
-        "record_id",
-        "component",
-    )
-    rows = touched.limit(cap).toArrow()
+    rows = _pairs(touched, "record_id", "component", id_type).limit(cap).toArrow()
     if rows.num_rows >= cap:
         return None
 
@@ -195,7 +209,7 @@ def _driver_fold(
     out = np.concatenate([cu, cv[: links.num_rows]])
     keep = np.unique(out[out >= 0])
     solved = _labels_frame(
-        spark,
+        assignments.sparkSession,
         ids.take(pa.array(keep)),
         ids.take(pa.array(roots[keep])),
         id_type,

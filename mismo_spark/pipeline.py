@@ -48,29 +48,44 @@ def normalized_domain(url_col) -> F.Column:
     return host
 
 
+_FILE_STATUS = re.compile(
+    r"\{path=(.*?); isDirectory=false; length=(\d+);.*?; modification_time=(\d+);"
+)
+
+
 def input_identity(pages: DataFrame) -> list:
     """What a run reads, in a form that is the same in every session:
-    each input file with its size and modification time (a driver-side
-    stat, no Spark job) and the input plan's text, which carries its
-    filters (``--lang``) and projections.
+    each input file with its size and modification time, as listed in
+    the file index Spark built when the pages were read (no further
+    file-system call, no Spark job), and the input plan in full with
+    its expression ids normalized, which carries its filters
+    (``--lang``), literals and projections.
 
-    Input that is not all files (in-memory or generated data) has no
-    identity that holds across sessions; Spark's plan hash, added for
-    it, holds within one, so such a run resumes only in the session
-    that wrote its checkpoints."""
-    spark = pages.sparkSession
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    files = []
-    for name in sorted(pages.inputFiles()):
-        path = spark._jvm.org.apache.hadoop.fs.Path(name)
-        status = path.getFileSystem(conf).getFileStatus(path)
-        files.append((name, status.getLen(), status.getModificationTime()))
+    Input that is not all files (in-memory or generated data), or a
+    listing that does not parse, has no identity that holds across
+    sessions; Spark's plan hash, added for it, holds within one, so
+    such a run resumes only in the session that wrote its
+    checkpoints."""
     plan = pages._jdf.queryExecution().analyzed()
-    # expression ids (`lang#12`) are numbered per session
-    identity = [files, re.sub(r"#\d+", "", plan.toString())]
+    files, other = [], False
     leaves = plan.collectLeaves()
-    kinds = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.length())}
-    if kinds != {"LogicalRelation"}:
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        relation = leaf.relation() if leaf.getClass().getSimpleName() == "LogicalRelation" else None
+        if relation is None or relation.getClass().getSimpleName() != "HadoopFsRelation":
+            other = True
+            continue
+        # the whole listing in one JVM call: Hadoop's FileStatus.toString
+        # carries each file's path, length and modification time
+        statuses = relation.location().allFiles()
+        found = _FILE_STATUS.findall(statuses.mkString("\n"))
+        other |= len(found) != statuses.length()
+        files += [(path, int(size), int(mtime)) for path, size, mtime in found]
+    # canonical expression ids are positions, not per-session counters;
+    # no field limit, so a long select is not cut to "... N more fields"
+    text = plan.canonicalized().treeString(True, False, 2**31 - 1, False, False)
+    identity = [sorted(files), text]
+    if other:
         identity.append(pages.semanticHash())
     return identity
 
@@ -355,8 +370,12 @@ class DedupePipeline:
         # schema (hashes only) — stale v2 checkpoints must not be reused.
         # The input identity keeps a resume from replaying stages built
         # from other pages (or another filter) in the same work_dir.
+        # Only a checkpointed run reads a fingerprint.
         fp_records = self._fp(
-            "records", "v3", self.keep_latest_snapshots, input_identity(pages)
+            "records",
+            "v3",
+            self.keep_latest_snapshots,
+            input_identity(pages) if self.checkpoint else None,
         )
         records = self._stage(
             spark, "01_records", fp_records, lambda: self.prepare_records(pages)

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import math
 import os
-from contextlib import contextmanager, nullcontext
+from contextlib import contextmanager
 from types import SimpleNamespace
 
 import pytest
@@ -51,8 +51,9 @@ def broadcast_threshold(spark, value: str):
 
 @pytest.fixture
 def folds(monkeypatch):
-    """Results of every driver fold ``incremental_components`` tries
-    (None where it gave the fold up to the Spark path)."""
+    """Results of every driver fold ``incremental_components`` solves
+    from a collected batch (None where the touched rows sent it to the
+    Spark path)."""
     from mismo_spark.cluster import incremental
 
     seen = []
@@ -67,23 +68,24 @@ def folds(monkeypatch):
 
 
 @pytest.fixture
-def fold(request, spark, folds):
-    """``with fold.run():`` runs ``incremental_components`` on one path:
+def fold(request, monkeypatch, folds):
+    """The path the test's ``incremental_components`` calls take:
     "driver" unless parametrized indirectly with "spark".  "driver" is
     the default threshold, where every fold of these small batches must
     be solved on the driver, unless the test sets ``fold.driver =
-    False`` (ids the fold does not take).  "spark" is a threshold of
-    -1, where the driver fold is never tried."""
+    False`` (ids the fold does not take).  "spark" never collects the
+    batch, so the fold runs its Spark joins; the sub-graph's
+    ``connected_components`` keeps its own driver finish, as the star
+    rounds are covered by tests/test_cc.py."""
+    from mismo_spark.cluster import incremental
+
     spark_path = getattr(request, "param", "driver") == "spark"
-    path = SimpleNamespace(
-        driver=True,
-        run=lambda: broadcast_threshold(spark, "-1") if spark_path else nullcontext(),
-    )
-    yield path
+    path = SimpleNamespace(driver=not spark_path)
     if spark_path:
-        assert not folds
-    else:
-        assert folds and all((r is not None) == path.driver for r in folds)
+        monkeypatch.setattr(incremental, "_collect_batch", lambda *args: None)
+    yield path
+    assert bool(folds) == path.driver
+    assert all(r is not None for r in folds)
 
 
 @pytest.fixture

@@ -35,19 +35,18 @@ def test_incremental_cluster_stream(spark, tmp_path, fold):
     _df(spark, batch2).coalesce(1).write.mode("append").parquet(incoming)
 
     state_dir = str(tmp_path / "state")
-    with fold.run():
-        q = incremental_cluster_stream(
-            spark,
-            input_dir=incoming,
-            key_columns=["key"],
-            state_dir=state_dir,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            corpus=corpus,
-            initial_assignments=seed_assign,
-            schema=_df(spark, []).schema,
-            max_files_per_trigger=1,
-        )
-        q.awaitTermination(300)
+    q = incremental_cluster_stream(
+        spark,
+        input_dir=incoming,
+        key_columns=["key"],
+        state_dir=state_dir,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        corpus=corpus,
+        initial_assignments=seed_assign,
+        schema=_df(spark, []).schema,
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
 
     got = {
         r["record_id"]: r["component"]
@@ -73,16 +72,15 @@ def test_incremental_cluster_stream_no_seed(spark, tmp_path, fold):
 
     state_dir = str(tmp_path / "state")
     assert read_assignments(spark, state_dir) is None
-    with fold.run():
-        q = incremental_cluster_stream(
-            spark,
-            input_dir=incoming,
-            key_columns=["key"],
-            state_dir=state_dir,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            schema=_df(spark, []).schema,
-        )
-        q.awaitTermination(300)
+    q = incremental_cluster_stream(
+        spark,
+        input_dir=incoming,
+        key_columns=["key"],
+        state_dir=state_dir,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        schema=_df(spark, []).schema,
+    )
+    q.awaitTermination(300)
     got = {
         r["record_id"]: r["component"]
         for r in read_assignments(spark, state_dir).collect()

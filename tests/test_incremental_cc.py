@@ -51,10 +51,9 @@ def test_incremental_equals_full_recompute_randomized(spark, fold):
     old = connected_components(
         _edges(spark, old_edges), _ids(spark, range(n_old))
     )
-    with fold.run():
-        inc = _assign(
-            incremental_components(old, _edges(spark, new_edges), _ids(spark, new_ids))
-        )
+    inc = _assign(
+        incremental_components(old, _edges(spark, new_edges), _ids(spark, new_ids))
+    )
     full = connected_components(
         _edges(spark, old_edges + new_edges),
         _ids(spark, list(range(n_old)) + new_ids),
@@ -66,19 +65,17 @@ def test_incremental_untouched_components_pass_through(spark, fold):
     old_edges = [(0, 1), (2, 3), (4, 5)]
     old = connected_components(_edges(spark, old_edges), _ids(spark, range(6)))
     # one new edge merges {0,1} with {2,3}; {4,5} must be untouched
-    with fold.run():
-        got = _assign(incremental_components(old, _edges(spark, [(1, 2)])))
+    got = _assign(incremental_components(old, _edges(spark, [(1, 2)])))
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4}
 
 
 def test_incremental_pure_new_batch(spark, fold):
     old = connected_components(_edges(spark, [(0, 1)]), _ids(spark, range(2)))
-    with fold.run():
-        got = _assign(
-            incremental_components(
-                old, _edges(spark, [(10, 11)]), _ids(spark, [10, 11, 12])
-            )
+    got = _assign(
+        incremental_components(
+            old, _edges(spark, [(10, 11)]), _ids(spark, [10, 11, 12])
         )
+    )
     assert got == {0: 0, 1: 0, 10: 10, 11: 10, 12: 12}
 
 
@@ -102,10 +99,9 @@ def _rows(df):
 
 
 def _fold_equals_scratch(
-    spark, path, old_pairs, old_ids, new_pairs, new_ids, id_type="long"
+    spark, old_pairs, old_ids, new_pairs, new_ids, id_type="long"
 ):
-    """Rows of the fold, run inside ``path``, == rows of a from-scratch
-    CC over the union."""
+    """Rows of the fold == rows of a from-scratch CC over the union."""
     edges = lambda pairs: spark.createDataFrame(  # noqa: E731
         pairs, f"record_id_l {id_type}, record_id_r {id_type}"
     )
@@ -113,12 +109,11 @@ def _fold_equals_scratch(
         [(x,) for x in xs], f"record_id {id_type}"
     )
     old = connected_components(edges(old_pairs), ids(old_ids))
-    with path:
-        inc = _rows(
-            incremental_components(
-                old, edges(new_pairs), None if new_ids is None else ids(new_ids)
-            )
+    inc = _rows(
+        incremental_components(
+            old, edges(new_pairs), None if new_ids is None else ids(new_ids)
         )
+    )
     every = set(old_ids) | set(new_ids or []) | {x for p in new_pairs for x in p}
     full = connected_components(edges(old_pairs + new_pairs), ids(sorted(every)))
     assert inc == _rows(full)
@@ -148,7 +143,7 @@ OLD_IDS = list(range(12))
 )
 @BOTH_PATHS
 def test_fold_rows_equal_scratch(spark, fold, new_pairs, new_ids):
-    _fold_equals_scratch(spark, fold.run(), OLD_PAIRS, OLD_IDS, new_pairs, new_ids)
+    _fold_equals_scratch(spark, OLD_PAIRS, OLD_IDS, new_pairs, new_ids)
 
 
 @BOTH_PATHS
@@ -159,7 +154,6 @@ def test_fold_string_ids_rows_equal_scratch(spark, fold):
     s = lambda pairs: [(f"r{a}", f"r{b}") for a, b in pairs]  # noqa: E731
     _fold_equals_scratch(
         spark,
-        fold.run(),
         s(OLD_PAIRS),
         [f"r{i}" for i in OLD_IDS],
         s([(9, 10), (2, 7), (7, 7), (9, 10)]),
@@ -211,15 +205,21 @@ def test_fold_over_budget_runs_spark_path(spark, folds, collects, rows):
             incremental_components(old, _edges(spark, BIG_NEW), _ids(spark, BIG_NEW_IDS))
         )
     assert got == want
-    assert folds == [None]
+    # an over-budget batch is never solved; touched rows over it are
+    # found by the one touched query the Spark path then reuses
+    assert folds == ([None] if rows == 40 else [])
     assert collects and max(collects) * 16 <= threshold
 
 
-@pytest.mark.parametrize("mode", ["driver", "spark", "over-budget"])
-def test_links_plan_runs_once(spark, mode):
+@pytest.mark.parametrize(
+    "threshold",
+    [str(10 * 2**20), "-1", str(16 * len(BIG_NEW) - 1), str(16 * 40 - 1)],
+    ids=["driver", "spark", "batch-over", "touched-over"],
+)
+def test_links_plan_runs_once(spark, threshold):
     """The caller's links plan runs once per row on the driver fold,
     on the Spark path, and when the fold collects the links and then
-    finds the touched rows over the budget."""
+    finds them, or the touched rows, over the budget."""
     acc = spark.sparkContext.accumulator(0)
 
     def seen(x):
@@ -234,8 +234,34 @@ def test_links_plan_runs_once(spark, mode):
         F.udf(seen, "long").asNondeterministic()("record_id_l").alias("record_id_l"),
         "record_id_r",
     )
-    threshold = {"driver": "10485760", "spark": "-1", "over-budget": str(16 * 40 - 1)}
-    with broadcast_threshold(spark, threshold[mode]):
+    with broadcast_threshold(spark, threshold):
         got = _rows(incremental_components(old, links))
     assert got == [(i, 0) for i in [*range(40), 100, 101]]
     assert acc.value == len(BIG_NEW)
+
+
+def test_touched_over_budget_reads_assignments_as_spark_path(spark):
+    """A fold that finds the touched rows over the budget goes on from
+    the checkpoint its touched query filled: it reads ``assignments``
+    no more often than the Spark path does."""
+    links = _edges(spark, BIG_NEW)
+    base = connected_components(_edges(spark, BIG_OLD), _ids(spark, range(40)))
+    base = base.localCheckpoint()
+
+    def reads(threshold):
+        acc = spark.sparkContext.accumulator(0)
+
+        def seen(x):
+            acc.add(1)
+            return x
+
+        old = base.select(
+            F.udf(seen, "long").asNondeterministic()("record_id").alias("record_id"),
+            "component",
+        )
+        with broadcast_threshold(spark, threshold):
+            got = _rows(incremental_components(old, links))
+        assert got == [(i, 0) for i in [*range(40), 100, 101]]
+        return acc.value
+
+    assert reads(str(16 * 40 - 1)) == reads("-1")

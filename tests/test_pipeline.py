@@ -100,6 +100,16 @@ def test_resume_checks_its_input(spark, tmp_path):
     assert input_identity(spark.read.parquet(paths[0])) == input_identity(
         spark.read.parquet(paths[0])
     )
+    # nor does it drop a literal that looks like an expression id, or a
+    # field past Spark's print limit
+    pages = spark.read.parquet(paths[0])
+    hashed = [input_identity(pages.filter(F.col("url") == f"a#{n}")) for n in (1, 2)]
+    assert hashed[0] != hashed[1]
+    wide = [
+        input_identity(pages.select(*[F.lit(i).alias(f"c{i}") for i in range(30)], F.lit(n)))
+        for n in (1, 2)
+    ]
+    assert wide[0] != wide[1]
     run(work, spark.read.parquet(paths[0]))
     second = spark.read.parquet(paths[1])
     assert run(work, second) == run(str(tmp_path / "fresh"), second)
