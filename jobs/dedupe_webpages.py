@@ -4,7 +4,7 @@ Usage (cluster):
     zip -r mismo_spark.zip mismo_spark
     spark-submit --py-files mismo_spark.zip jobs/dedupe_webpages.py \
         --input  s3://bucket/pages/            # or any parquet/Iceberg path
-        --work-dir s3://bucket/dedupe_run_01/  # per-stage checkpoints + manifest
+        --work-dir /mnt/shared/dedupe_run_01/  # checkpoints + manifest: a local or mounted path
         --output s3://bucket/clusters/         # (record_id, component)
 
 Sandbox smoke:
@@ -27,7 +27,11 @@ import sys
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="parquet path of pages (url, warc_ts, html, text, lang)")
-    ap.add_argument("--work-dir", required=True, help="checkpoint/manifest directory")
+    ap.add_argument(
+        "--work-dir", required=True,
+        help="checkpoint/manifest directory: a local or mounted path, read and "
+        "written on the driver",
+    )
     ap.add_argument("--output", required=True, help="output parquet (record_id, component)")
     ap.add_argument("--threshold-odds", type=float, default=10.0)
     ap.add_argument("--max-pairs-per-key", type=int, default=100_000)

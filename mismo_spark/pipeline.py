@@ -4,13 +4,21 @@ records → (extract text) → blocking (normalized-domain key ∪ minhash-LSH
 of text) → pairwise comparison vectors → Fellegi-Sunter scoring (EM or
 provided weights) → odds threshold → connected components → clusters.
 
-Every stage checkpoints to parquet (Iceberg-shaped) under ``work_dir``
-with a manifest entry carrying the stage's row count, input
-fingerprint (the stage's parameters chained onto ``input_identity`` of
-the pages), and per-partition counters — a resumed run replays
-completed stages from disk and recomputes only what's missing
-("resumable from any checkpointed stage", BASELINE.json north_rule).
-mismo's analogue is per-stage ``Linkage.to_parquets``
+Every stage checkpoints to parquet (Iceberg-shaped) under ``work_dir``,
+and the trained weights to ``weights.json``, all through one lookup →
+write → record path (``DedupePipeline._artefact``).  Each artefact's
+manifest entry carries its input fingerprint (the stage's parameters
+chained onto ``input_identity`` of the pages); a parquet stage's also
+carries its row count and the rows of each file it wrote, read on the
+driver from the footers just written — no Spark job.  An artefact's
+entry is dropped before it is rewritten and recorded only once the
+write is done, and the manifest is replaced atomically, so a run that
+fails part way never leaves an entry for a half-written artefact.  A
+resumed run replays completed stages from disk and recomputes only
+what's missing ("resumable from any checkpointed stage", BASELINE.json
+north_rule).  ``work_dir`` is a local or mounted path: the manifest,
+lookups and footer reads use the driver's file system.  mismo's
+analogue is per-stage ``Linkage.to_parquets``
 (mismo/linkage/_linkage.py:103-132).
 """
 
@@ -22,8 +30,10 @@ import re
 import time
 from dataclasses import dataclass, field
 
+import pyarrow.dataset as pa_dataset
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mismo_spark.cluster.cc import connected_components
 from mismo_spark.compare.enum import EnumComparer, compare
@@ -88,6 +98,37 @@ def input_identity(pages: DataFrame) -> list:
     if other:
         identity.append(pages.semanticHash())
     return identity
+
+
+# the Spark schema of the rows, which every parquet file Spark writes
+# carries in its footer
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _write_parquet(df: DataFrame, path: str) -> dict:
+    """Write a stage and take its row counts, per file, from the
+    footers just written: a driver-side read, no Spark job.  (The
+    dataset skips the files Spark hides: ``_SUCCESS``, ``.crc``.)"""
+    df.write.mode("overwrite").parquet(path)
+    files = pa_dataset.dataset(path, format="parquet").get_fragments()
+    counts = [{"file": os.path.basename(f.path), "rows": f.metadata.num_rows} for f in files]
+    return {
+        "rows": sum(c["rows"] for c in counts),
+        "n_partitions": len(counts),
+        "partition_counts": counts,
+    }
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a stage back with the schema from its footer, so the read
+    infers nothing and runs no Spark job."""
+    meta = pa_dataset.dataset(path, format="parquet").schema.metadata
+    return spark.read.schema(StructType.fromJson(json.loads(meta[_SPARK_SCHEMA]))).parquet(path)
+
+
+def _write_weights(weights: Weights, path: str) -> dict:
+    weights.to_json(path)
+    return {}
 
 
 def pair_features(pairs: DataFrame) -> DataFrame:
@@ -203,6 +244,12 @@ class DedupePipeline:
 
     # ------------------------------------------------------------------
 
+    def __post_init__(self) -> None:
+        # the manifest, the lookups and the footer reads use the
+        # driver's file system: a URI would be a relative local path
+        if self.checkpoint and re.match(r"[A-Za-z][A-Za-z0-9+.-]*:/", self.work_dir):
+            raise ValueError(f"work_dir must be a local or mounted path: {self.work_dir!r}")
+
     def _manifest_path(self) -> str:
         return os.path.join(self.work_dir, "manifest.json")
 
@@ -214,44 +261,47 @@ class DedupePipeline:
             return {"stages": {}}
 
     def _save_manifest(self, m: dict) -> None:
+        """Write the manifest whole or not at all: a temp file, then
+        an atomic rename."""
         os.makedirs(self.work_dir, exist_ok=True)
-        with open(self._manifest_path(), "w") as f:
+        tmp = self._manifest_path() + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(m, f, indent=2)
+        os.replace(tmp, self._manifest_path())
 
-    def _stage(
-        self, spark: SparkSession, name: str, fingerprint: str, compute
-    ) -> DataFrame:
-        """Run-or-resume one stage.  The checkpoint doubles as the
-        lineage cut between stages."""
-        path = os.path.join(self.work_dir, f"{name}.parquet")
+    def _artefact(self, name: str, fingerprint: str, file: str, compute, write, load):
+        """The one lookup → write → record path of every artefact.
+
+        A recorded artefact whose fingerprint matches is ``load``-ed
+        from ``file`` under ``work_dir``.  Otherwise its entry is
+        dropped from the manifest before ``write(compute(), path)``
+        overwrites the file — a write that fails part way leaves no
+        entry to replay — and the facts ``write`` returns are recorded
+        once it is done."""
         if not self.checkpoint:
             return compute()
+        path = os.path.join(self.work_dir, file)
         manifest = self._load_manifest()
-        entry = manifest["stages"].get(name)
+        entry = manifest["stages"].pop(name, None)
         if entry and entry.get("fingerprint") == fingerprint and os.path.exists(path):
-            return spark.read.parquet(path)
+            return load(path)
+        self._save_manifest(manifest)
         t0 = time.time()
-        df = compute()
-        df.write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
-        # per-partition counters: the "lineage and counters" evidence
-        pcounts = [
-            {"partition": r["p"], "rows": r["n"]}
-            for r in out.groupBy(F.spark_partition_id().alias("p"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        ]
-        manifest = self._load_manifest()
+        facts = write(compute(), path)
         manifest["stages"][name] = {
             "fingerprint": fingerprint,
             "path": path,
-            "rows": sum(p["rows"] for p in pcounts),
-            "n_partitions": len(pcounts),
-            "partition_counts": pcounts,
+            **facts,
             "seconds": round(time.time() - t0, 3),
         }
         self._save_manifest(manifest)
-        return out
+        return load(path)
+
+    def _stage(self, spark: SparkSession, name: str, fingerprint: str, compute) -> DataFrame:
+        """Run-or-resume one parquet stage.  The checkpoint doubles as
+        the lineage cut between stages."""
+        read = lambda path: _read_parquet(spark, path)  # noqa: E731
+        return self._artefact(name, fingerprint, f"{name}.parquet", compute, _write_parquet, read)
 
     # ------------------------------------------------------------------
 
@@ -425,29 +475,14 @@ class DedupePipeline:
         compared = self._stage(spark, "03_compared", fp_compared, _compared)
 
         if self.weights is None:
-            fp_weights = self._fp(
-                fp_compared, "weights", self.em_max_pairs, self.seed
+            self.weights = self._artefact(
+                "weights",
+                self._fp(fp_compared, "weights", self.em_max_pairs, self.seed),
+                "weights.json",
+                lambda: self._train_weights(compared),
+                _write_weights,
+                Weights.from_json,
             )
-            wpath = os.path.join(self.work_dir, "weights.json")
-            manifest = self._load_manifest() if self.checkpoint else {"stages": {}}
-            entry = manifest["stages"].get("weights")
-            if (
-                self.checkpoint
-                and entry
-                and entry.get("fingerprint") == fp_weights
-                and os.path.exists(wpath)
-            ):
-                self.weights = Weights.from_json(wpath)
-            else:
-                self.weights = self._train_weights(compared)
-                if self.checkpoint:
-                    self.weights.to_json(wpath)
-                    manifest = self._load_manifest()
-                    manifest["stages"]["weights"] = {
-                        "fingerprint": fp_weights,
-                        "path": wpath,
-                    }
-                    self._save_manifest(manifest)
 
         fp_scored = self._fp(
             fp_compared, "scored", self.weights.to_json(), self.em_max_pairs

@@ -8,12 +8,16 @@ The BASELINE.json gates at test scale:
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from mismo_spark.cluster.metrics import pairwise_prf
 from mismo_spark.corpus import extract_text, make_corpus
 from mismo_spark.pipeline import DedupePipeline, input_identity, normalized_domain
+from mismo_spark.types.linkage import ID_L
 
 
 @pytest.fixture(scope="module")
@@ -73,15 +77,86 @@ def test_pipeline_resume_identical(spark, corpus, tmp_path):
     second = {(r["record_id"], r["component"]) for r in c2.collect()}
     assert first == second
 
-    # manifest carries per-stage rows + per-partition counters
-    import json, os
-
-    with open(os.path.join(work, "manifest.json")) as f:
-        manifest = json.load(f)
+    # manifest carries per-stage rows + per-file counters, which are
+    # the stage's parquet row count
+    manifest = _manifest(work)
     for stage in ["01_records", "02_links", "03_compared", "04_scored", "05_matches", "06_components"]:
-        assert stage in manifest["stages"]
-        assert manifest["stages"][stage]["rows"] > 0
-        assert manifest["stages"][stage]["partition_counts"]
+        entry = manifest[stage]
+        assert entry["rows"] > 0
+        assert entry["rows"] == spark.read.parquet(entry["path"]).count()
+        assert entry["partition_counts"]
+        assert sum(p["rows"] for p in entry["partition_counts"]) == entry["rows"]
+
+
+def _manifest(work_dir: str) -> dict:
+    with open(os.path.join(work_dir, "manifest.json")) as f:
+        return json.load(f)["stages"]
+
+
+def _components(pipe: DedupePipeline, spark, pages) -> set:
+    return {(r["record_id"], r["component"]) for r in pipe.run(spark, pages).collect()}
+
+
+def test_pipeline_empty_stages_resume(spark, tmp_path):
+    """A threshold no pair reaches: no match is recorded as 0 rows,
+    every record is its own component, and a resume replays both."""
+    pages = make_corpus(spark, 40, seed=3, skew_every=0).drop("label_true")
+    work = str(tmp_path / "work")
+
+    def run():
+        pipe = DedupePipeline(work_dir=work, seed=42, threshold_odds=float("inf"))
+        return _components(pipe, spark, pages)
+
+    first = run()
+    stages = _manifest(work)
+    assert stages["05_matches"]["rows"] == 0
+    assert stages["06_components"]["rows"] == stages["01_records"]["rows"] == pages.count()
+    assert len(first) == len({c for _, c in first}) == pages.count()
+    # Spark names every file it writes anew: the same listings are the
+    # same files
+    files = {st: os.listdir(os.path.join(work, f"{st}.parquet")) for st in ("05_matches", "06_components")}
+    assert run() == first
+    assert _manifest(work) == stages
+    for st, names in files.items():
+        assert os.listdir(os.path.join(work, f"{st}.parquet")) == names
+
+
+def _boom(_):
+    raise RuntimeError("task failed")
+
+
+class _LinksWriteFails(DedupePipeline):
+    """Its links write fails inside a task, once the overwrite has
+    cleared the links written before."""
+
+    def _stage(self, spark, name, fingerprint, compute):
+        if name == "02_links":
+            # nondeterministic: the filter is not pushed below the links
+            # plan, so it fails in the write's own tasks
+            boom = F.udf(_boom, "boolean").asNondeterministic()
+            compute = lambda c=compute: c().filter(boom(F.col(ID_L)))  # noqa: E731
+        return super()._stage(spark, name, fingerprint, compute)
+
+
+def test_failed_overwrite_is_not_replayed(spark, tmp_path):
+    """A run whose stage write fails part way leaves no manifest entry
+    that a later run could replay from the half-written stage."""
+    pages = make_corpus(spark, 40, seed=4, skew_every=0).drop("label_true")
+    work = str(tmp_path / "work")
+    first = _components(DedupePipeline(work_dir=work, seed=42, lsh_n_bands=8), spark, pages)
+    with pytest.raises(Exception):
+        _LinksWriteFails(work_dir=work, seed=42, lsh_n_bands=16).run(spark, pages)
+    assert "02_links" not in _manifest(work)
+    again = DedupePipeline(work_dir=work, seed=42, lsh_n_bands=8)
+    assert _components(again, spark, pages) == first
+
+
+@pytest.mark.parametrize("work_dir", ["s3://bucket/run", "hdfs:///run", "file:/tmp/run"])
+def test_uri_work_dir_rejected(work_dir):
+    """Checkpoints live on the driver's file system."""
+    with pytest.raises(ValueError, match="local or mounted"):
+        DedupePipeline(work_dir=work_dir)
+    DedupePipeline(work_dir=work_dir, checkpoint=False)
 
 
 def test_resume_checks_its_input(spark, tmp_path):
@@ -124,13 +199,14 @@ def test_pipeline_skew_split_identical_clusters(spark, corpus, tmp_path):
     """Explicit skew splitting is a physical-plan change only: the same
     corpus clusters identically with domain-key salting forced on
     (budget low enough that the skew_every=100 mega-domains tile)."""
+    # the plain side is the suite's one full run without checkpoints;
+    # the salted side's checkpoints cut its lineage between stages
     plain = DedupePipeline(
         work_dir=str(tmp_path / "plain"), seed=42, checkpoint=False
     ).run(spark, corpus.drop("label_true"))
     salted = DedupePipeline(
         work_dir=str(tmp_path / "salted"),
         seed=42,
-        checkpoint=False,
         skew_split_pairs=50,
     ).run(spark, corpus.drop("label_true"))
     a = {(r["record_id"], r["component"]) for r in plain.collect()}

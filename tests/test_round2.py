@@ -277,14 +277,23 @@ def test_em_max_pairs_sampling(spark):
             assert lw_s.u == pytest.approx(lw_f.u, abs=0.08)
 
 
-def test_checkpoint_fingerprint_chaining(spark, tmp_path):
+def test_checkpoint_fingerprint_chaining(spark, tmp_path, monkeypatch):
     """Changing an upstream param invalidates every downstream stage;
-    changing only the threshold reuses 01-04 and recomputes 05+."""
+    changing only the threshold reuses 01-04 and the weights and
+    recomputes 05+; changing the EM sample retrains the weights."""
     import json
 
     from mismo_spark.corpus import make_corpus
     from mismo_spark.pipeline import DedupePipeline
 
+    trained = []
+    train = DedupePipeline._train_weights
+
+    def spy(self, compared):
+        trained.append(self.em_max_pairs)
+        return train(self, compared)
+
+    monkeypatch.setattr(DedupePipeline, "_train_weights", spy)
     pages = make_corpus(spark, 60, seed=7, skew_every=0)
     wd = str(tmp_path / "wd")
 
@@ -300,6 +309,18 @@ def test_checkpoint_fingerprint_chaining(spark, tmp_path):
         assert m1[st]["fingerprint"] == m2[st]["fingerprint"]
     for st in ("05_matches", "06_components"):
         assert m1[st]["fingerprint"] != m2[st]["fingerprint"]
+    # the weights are replayed from weights.json, not trained again
+    assert m2["weights"] == m1["weights"]
+    assert trained == [200_000]
+
+    # EM sample change: the weights are trained again, 01-03 reused
+    pipe_em = DedupePipeline(work_dir=wd, seed=7, lsh_n_bands=8, em_max_pairs=1000)
+    pipe_em.run(spark, pages).count()
+    m_em = json.load(open(f"{wd}/manifest.json"))["stages"]
+    assert trained == [200_000, 1000]
+    for st in ("01_records", "02_links", "03_compared"):
+        assert m_em[st] == m1[st]
+    assert m_em["weights"]["fingerprint"] != m1["weights"]["fingerprint"]
 
     # blocking change: 02 and EVERYTHING downstream invalidated
     pipe3 = DedupePipeline(work_dir=wd, seed=7, lsh_n_bands=16)
