@@ -7,16 +7,51 @@ DataFrame-bound.
 
 from __future__ import annotations
 
+import json
 import uuid
 from collections.abc import Callable, Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame
+import pyarrow.dataset as pa_dataset
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def unique_name(prefix: str = "tmp") -> str:
     """Collision-free temp column name (mismo/_util.py:284-291)."""
     return f"__{prefix}_{uuid.uuid4().hex[:8]}"
+
+
+def checkpoint(df: DataFrame, checkpoint_dir: str | None, tag: str) -> DataFrame:
+    """Cut ``df``'s lineage: the per-round checkpoint of every iterative
+    operator.
+
+    Without ``checkpoint_dir`` it is a lazy ``localCheckpoint``: the
+    caller's next action (a convergence fingerprint, an update count)
+    fills it, so a round costs one job, not two.  With it, ``df`` is
+    written to ``{checkpoint_dir}/{tag}.parquet``, which survives a lost
+    executor, and read back with ``df``'s own schema, so the read infers
+    nothing and no Spark job runs between the write and the return.
+    (The read makes every field nullable, as a bare read would.)"""
+    if checkpoint_dir is None:
+        return df.localCheckpoint(eager=False)
+    path = f"{checkpoint_dir}/{tag}.parquet"
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+# the Spark schema of the rows, which every parquet file Spark writes
+# carries in its footer
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet directory that Spark wrote, possibly in another
+    session, with the schema from its footer: a driver-side read of one
+    footer, so Spark infers nothing and runs no job.  ``path`` is on the
+    driver's file system."""
+    meta = pa_dataset.dataset(path, format="parquet").schema.metadata
+    return spark.read.schema(StructType.fromJson(json.loads(meta[_SPARK_SCHEMA]))).parquet(path)
 
 
 def explode_computed(

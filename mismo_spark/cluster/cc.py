@@ -13,12 +13,13 @@ mismo/cluster/_connected_components.py:253-263):
   rewritten toward the minimum, never gathered onto one reducer beyond
   a groupBy-min.  This is the scale path the north rule mandates.
 
-Both iterate driver-side with a per-round checkpoint (``localCheckpoint``
-or parquet when ``checkpoint_dir`` is given — the resumable variant),
-cutting lineage exactly like mismo's per-round ``.cache()``
-(mismo/cluster/_connected_components.py:207-209).  Convergence is
-detected with one cheap pass per round (count + order-independent
-xxhash64 sum of the edge set / label set).
+Both iterate driver-side with a per-round checkpoint (``_util.checkpoint``,
+shared by every iterative operator: a lazy ``localCheckpoint``, or, with
+``checkpoint_dir``, parquet read back with the written schema, so no
+schema-inference job runs), cutting lineage exactly like mismo's
+per-round ``.cache()`` (mismo/cluster/_connected_components.py:207-209).
+Convergence is detected with one cheap pass per round (count +
+order-independent xxhash64 sum of the edge set / label set).
 
 Ids of any orderable type are supported by factorizing to int64 first
 (mismo/_factorizer.py:12-152) — but *without* the reference's global
@@ -46,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
 
+from mismo_spark._util import RoundPartitions, checkpoint
 from mismo_spark.types.linkage import ID_L, ID_R
 
 _U, _V = "u", "v"
@@ -53,17 +55,6 @@ _INTEGRAL = (ByteType, IntegerType, LongType, ShortType)
 # the fixed-width part of one edge in Arrow: two int64 ids, or two
 # string offsets with room to spare; string ids add their bytes on top
 _EDGE_BYTES = 16
-
-
-def _chk(df: DataFrame, checkpoint_dir: str | None, tag: str) -> DataFrame:
-    if checkpoint_dir is None:
-        # lazy: the caller's very next action (convergence fingerprint /
-        # update count) materializes the checkpoint — one job per round,
-        # not two, while still cutting lineage
-        return df.localCheckpoint(eager=False)
-    path = f"{checkpoint_dir}/{tag}.parquet"
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
 
 
 def _set_fingerprint(df: DataFrame, cols: list[str]) -> tuple[int, int]:
@@ -311,7 +302,7 @@ def _driver_components(
     nulls = records is None and bool((cu < 0).any() or (cv < 0).any())
     labels = _labels_frame(spark, ids, ids.take(pa.array(roots)), id_type, nulls)
     if checkpoint_dir is not None:
-        labels = _chk(labels, checkpoint_dir, "driver")
+        labels = checkpoint(labels, checkpoint_dir, "driver")
     if records is None:
         return labels
     return _label_all(records.select("record_id"), labels)
@@ -323,8 +314,8 @@ def _cc_naive(edges: DataFrame, max_iter: int, checkpoint_dir: str | None) -> Da
     nodes = edges.select(F.col(_U).alias("id")).unionByName(
         edges.select(F.col(_V).alias("id"))
     ).distinct()
-    labels = _chk(nodes.withColumn("component", F.col("id")), checkpoint_dir, "naive_0")
-    edges = _chk(edges, checkpoint_dir, "naive_edges")
+    labels = checkpoint(nodes.withColumn("component", F.col("id")), checkpoint_dir, "naive_0")
+    edges = checkpoint(edges, checkpoint_dir, "naive_edges")
     for i in range(max_iter):
         lby = labels.withColumnRenamed("id", _V).withColumnRenamed("component", "c_v")
         lbx = labels.withColumnRenamed("id", _U).withColumnRenamed("component", "c_u")
@@ -336,7 +327,7 @@ def _cc_naive(edges: DataFrame, max_iter: int, checkpoint_dir: str | None) -> Da
             .unionByName(labels)
         )
         new_labels = cand.groupBy("id").agg(F.min("component").alias("component"))
-        new_labels = _chk(new_labels, checkpoint_dir, f"naive_{i + 1}")
+        new_labels = checkpoint(new_labels, checkpoint_dir, f"naive_{i + 1}")
         n_updates = (
             new_labels.alias("n")
             .join(labels.alias("o"), "id")
@@ -409,9 +400,7 @@ def _cc_star(edges: DataFrame, max_iter: int, checkpoint_dir: str | None) -> Dat
     with a left-join + coalesce against records/mapping/nodes anyway,
     so emitting root rows here would cost an extra O(V) distinct +
     join for nothing."""
-    from mismo_spark._util import RoundPartitions
-
-    cur = _chk(edges, checkpoint_dir, "star_0")
+    cur = checkpoint(edges, checkpoint_dir, "star_0")
     prev_fp = _set_fingerprint(cur, [_U, _V])
     # per-round exchanges over the (usually shrinking) edge relation:
     # clamp shuffle width to the live edge count the fingerprint pass
@@ -420,7 +409,7 @@ def _cc_star(edges: DataFrame, max_iter: int, checkpoint_dir: str | None) -> Dat
     try:
         rp.adapt(prev_fp[0])
         for i in range(max_iter):
-            cur = _chk(_small_star(_large_star(cur)), checkpoint_dir, f"star_{i + 1}")
+            cur = checkpoint(_small_star(_large_star(cur)), checkpoint_dir, f"star_{i + 1}")
             fp = _set_fingerprint(cur, [_U, _V])
             if fp == prev_fp:
                 break

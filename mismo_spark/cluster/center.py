@@ -38,20 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mismo_spark._util import RoundPartitions, checkpoint
 from mismo_spark.types.linkage import ID_L, ID_R
 
 # state codes (also used by the oracle SQL)
 _U, _C, _M = 0, 1, 2
 # upd encoding: state * _ENC + (center + 1); 0 / null = no change
 _ENC = 1 << 40
-
-
-def _chk(df: DataFrame, checkpoint_dir: str | None, tag: str) -> DataFrame:
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=False)
-    path = f"{checkpoint_dir}/{tag}.parquet"
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
 
 
 def center_clustering(
@@ -133,8 +126,6 @@ def center_clustering(
     w_edge = Window.partitionBy("k1", "k2")
     w_node = Window.partitionBy("node")
 
-    from mismo_spark._util import RoundPartitions
-
     # per-round exchanges over the geometrically shrinking undecided
     # relation: clamp shuffle width to the live row count (never above
     # the ambient setting — no-op at cluster scale).  The node-view
@@ -148,7 +139,7 @@ def center_clustering(
     rp = RoundPartitions(links.sparkSession, disable_aqe=True)
     assigned: DataFrame | None = None
     try:
-        rows = _chk(rows, checkpoint_dir, "center_rows_init")
+        rows = checkpoint(rows, checkpoint_dir, "center_rows_init")
         rp.adapt(rows.count())
         assigned = _center_rounds(
             rows, w_rank, w_edge, w_node, max_rounds, checkpoint_dir, rp
@@ -208,7 +199,7 @@ def _center_rounds(
             F.sum(F.coalesce(F.col("__node_upd"), F.lit(0))).over(w_edge)
             - F.coalesce(F.col("__node_upd"), F.lit(0)),
         )
-        st = _chk(st, checkpoint_dir, f"center_round_{rnd}")
+        st = checkpoint(st, checkpoint_dir, f"center_round_{rnd}")
 
         emits = st.filter(
             (F.col("__rn") == 1) & F.col("__upd").isNotNull()

@@ -36,7 +36,10 @@ threshold of ``-1``, string ids and ``naive`` find the touched
 components with two hash joins (shuffles sized by the NEW batch)
 instead.  The Spark path then partitions the assignment table with
 one semi/anti-join and runs ``connected_components`` over touched+new
-only.  Either way the caller's links plan runs once.
+only.  Either way the caller's links plan runs once, and the Spark
+path reads ``assignments`` three times per row (touched components,
+touched rows, untouched rows): the touched components are
+checkpointed, or, after a give-up, taken from the touched rows.
 """
 
 from __future__ import annotations
@@ -122,18 +125,24 @@ def incremental_components(
     touched_comps = assignments.join(ends, "record_id", "left_semi").select(
         "component"
     )
-    touched_comps = (
-        touched_comps.distinct() if batch is None else F.broadcast(touched_comps)
-    )
-    touched = assignments.join(touched_comps, "component", "left_semi")
     if batch is None:
+        # sized by the batch and read twice (the touched rows, then the
+        # untouched anti-join): checkpointed, so its scan of
+        # `assignments` runs once, filled by its first reader
+        touched_comps = touched_comps.distinct().localCheckpoint(eager=False)
+        touched = assignments.join(touched_comps, "component", "left_semi")
         touched = touched.localCheckpoint(eager=True)
     else:
+        touched = assignments.join(F.broadcast(touched_comps), "component", "left_semi")
         # filled by the fold's collect, which a give-up then reuses
         touched = touched.localCheckpoint(eager=False)
         done = _driver_fold(assignments, batch, touched, id_type, cap)
         if done is not None:
             return done
+        # a give-up takes the touched components from those rows, not
+        # from `assignments` again; they are no more than the batch's
+        # ids, so they still broadcast
+        touched_comps = F.broadcast(touched.select("component").distinct())
     untouched = assignments.join(touched_comps, "component", "left_anti").select(
         "record_id", "component"
     )

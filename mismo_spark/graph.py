@@ -2,7 +2,8 @@
 tables, and iterative PageRank — the crawl-frontier-prioritization /
 spam-downweighting layer of a Common-Crawl-style pipeline (mismo has no
 graph module; clustering shares the shape via ``cluster/cc.py``, and
-PageRank reuses its per-round checkpoint discipline).
+every iterative operator here cuts lineage per round with the shared
+``_util.checkpoint``).
 
 Scale notes (100 TB / 10^12 pages):
 
@@ -14,11 +15,12 @@ Scale notes (100 TB / 10^12 pages):
   groupBy(dst).sum — the canonical two-shuffle round.  The edge table
   is ``persist()``-ed with its out-degree column precomputed so the
   per-round join reuses one cached, already-partitioned relation;
-  ranks are ``localCheckpoint``-ed per round (cc.py's discipline) so
-  lineage stays O(1) instead of O(k).  Dangling mass (nodes with no
-  out-edges) is folded back in-plan via a broadcast single-row
-  aggregate — no per-round ``collect`` on the driver, so the whole
-  round is one job and the driver never holds rank data.
+  ranks are checkpointed per round (``_util.checkpoint``, shared with
+  the clustering rounds) so lineage stays O(1) instead of O(k).
+  Dangling mass (nodes with no out-edges) is folded back in-plan via a
+  broadcast single-row aggregate — no per-round ``collect`` on the
+  driver, so the whole round is one job and the driver never holds
+  rank data.
 
 Determinism / oracle parity: ranks are pure float64 arithmetic over
 deterministic joins; summation-order differences between engines are
@@ -32,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from mismo_spark._util import checkpoint
 
 __all__ = [
     "extract_outlinks",
@@ -64,18 +68,6 @@ _ANCHOR_ELEM_RE = r"(?s)<a\s[^>]*>.*?</a>"
 
 def _strip_quote(link: Column) -> Column:
     return F.regexp_replace(link, r"""^["']""", "")
-
-
-def _graph_chk(df: DataFrame, checkpoint_dir: str | None, tag: str) -> DataFrame:
-    """Per-round lineage cut: ``localCheckpoint`` (lazy — the next
-    round's job materializes it) or durable parquet under
-    ``checkpoint_dir`` so a lost executor can't kill a long iterative
-    job.  Same discipline as ``cluster/cc.py:_chk``."""
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=False)
-    path = f"{checkpoint_dir}/{tag}.parquet"
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
 
 
 def extract_outlinks(
@@ -286,13 +278,13 @@ def pagerank(
     round one job with no driver-side scalar collect.  The teleport
     vector rides the existing nodes join (persisted once); the dangling
     node set is iteration-invariant, so it is derived once from the
-    cached relations and persisted.  Ranks are checkpointed per round —
-    ``localCheckpoint`` by default, or durable parquet under
-    ``checkpoint_dir`` (cc.py's discipline) so a lost executor can't
-    kill a long rank job at cluster scale.  The final ranks are
-    materialized before return and the cached relations unpersisted, so
-    long-lived sessions running many rank jobs don't accumulate cached
-    relations.
+    cached relations and persisted.  Ranks are checkpointed per round
+    with ``_util.checkpoint`` — ``localCheckpoint`` by default, or
+    durable parquet under ``checkpoint_dir``, read back with no schema
+    inference, so a lost executor can't kill a long rank job at cluster
+    scale.  The final ranks are materialized before return and the
+    cached relations unpersisted, so long-lived sessions running many
+    rank jobs don't accumulate cached relations.
     """
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
@@ -384,7 +376,7 @@ def pagerank(
                 dangling.join(ranks, "node")
                 .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass"))
             )
-            ranks = _graph_chk(
+            ranks = checkpoint(
                 tvec.join(contrib, "node", "left")
                 .crossJoin(dm)
                 .select(
@@ -719,7 +711,7 @@ def core_numbers(
             c.select(F.col("node").alias("v"), F.col("core").alias("c_v")), "v"
         )
         w = Window.partitionBy("u").orderBy(F.col("c_v").desc(), F.col("v").asc())
-        c = _graph_chk(
+        c = checkpoint(
             nb.withColumn("__rn", F.row_number().over(w))
             .groupBy(F.col("u").alias("node"))
             .agg(F.max(F.least(F.col("c_v"), F.col("__rn"))).alias("core")),
@@ -847,7 +839,7 @@ def label_propagation(
         counts = nbr_lbl.groupBy("node", "nlbl").agg(
             F.count(F.lit(1)).alias("cnt")
         )
-        labels = _graph_chk(
+        labels = checkpoint(
             counts.groupBy("node").agg(
                 F.min(F.struct((-F.col("cnt")).alias("negcnt"), F.col("nlbl"))).alias(
                     "__pick"
@@ -1021,14 +1013,14 @@ def hits(
     hub = nodes.select("node", F.lit(1.0 / n).alias("hub"))
     auth = None
     for i in range(n_iter):
-        auth = _graph_chk(
+        auth = checkpoint(
             _half_round(hub, "src", "dst", "hub").withColumnRenamed(
                 "hub", "authority"
             ),
             checkpoint_dir,
             f"hits_auth_{i}",
         )
-        hub = _graph_chk(
+        hub = checkpoint(
             _half_round(auth, "dst", "src", "authority").withColumnRenamed(
                 "authority", "hub"
             ),

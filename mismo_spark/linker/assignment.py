@@ -50,9 +50,9 @@ Scale shape: each round is window exchanges only — hash partitions on
 ``record_id_l`` / ``record_id_r`` (bipartite) or on ``node`` /
 ``(id_l, id_r)`` over the 2×-row node view (dedupe) — no joins, and no
 driver-side data except a per-round (matched, remaining) count pair.
-Lineage is cut per round exactly like cluster/cc.py (lazy
-``localCheckpoint`` or durable parquet under ``checkpoint_dir`` for
-resumable long jobs).
+Lineage is cut per round by ``_util.checkpoint``, as in cluster/cc.py
+(lazy ``localCheckpoint`` or durable parquet under ``checkpoint_dir``
+for resumable long jobs).
 """
 
 from __future__ import annotations
@@ -60,6 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mismo_spark._util import checkpoint
 from mismo_spark.types.linkage import ID_L, ID_R
 
 _DOM = "__dom"
@@ -68,14 +69,6 @@ _RN_R = "__rn_r"
 _NODE = "__node"
 _POS = "__pos"
 _RN = "__rn"
-
-
-def _chk(df: DataFrame, checkpoint_dir: str | None, tag: str) -> DataFrame:
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=False)
-    path = f"{checkpoint_dir}/{tag}.parquet"
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
 
 
 def _order(score_col: str):
@@ -136,7 +129,7 @@ def mutual_best_links(
     if dedupe is None:
         # materialize BEFORE the probe — see one_to_one_links (the
         # semi-join would otherwise execute the upstream scoring twice)
-        links = _chk(links, None, "mutual_best_probe_input")
+        links = links.localCheckpoint(eager=False)
         dedupe = _shares_id_space(links)
     if dedupe:
         w_node = Window.partitionBy(_NODE).orderBy(*order)
@@ -248,7 +241,7 @@ def one_to_one_links(
         # links plan on both sides, and without a lineage cut the whole
         # upstream scoring pipeline would execute twice just for the
         # regime detection (r5 ADVICE)
-        rem = _chk(rem, checkpoint_dir, "one_to_one_probe_input")
+        rem = checkpoint(rem, checkpoint_dir, "one_to_one_probe_input")
         dedupe = _shares_id_space(rem)
     if dedupe:
         rem = _canonical_pairs(rem, order)
@@ -267,10 +260,10 @@ def one_to_one_links(
     # right-sizes the exchanges; see RoundPartitions).
     rp = RoundPartitions(links.sparkSession, disable_aqe=True)
     try:
-        rem = _chk(rem, checkpoint_dir, "one_to_one_input")
+        rem = checkpoint(rem, checkpoint_dir, "one_to_one_input")
         rp.adapt(rem.count())
         for rnd in range(max_rounds):
-            flagged = _chk(
+            flagged = checkpoint(
                 one_round(rem, order), checkpoint_dir, f"one_to_one_round_{rnd}"
             )
             counts = flagged.groupBy(_DOM).count().collect()

@@ -27,8 +27,9 @@ every center it is loose-similar to, plus itself.
 Scale shape: per round two anti-joins (blocked ids, covered ids) and
 two semi-joins (edge shrink), all hash-partitioned on record id — no
 windows over unbounded partitions, no driver data beyond a count.
-Edges shrink geometrically; lineage is cut per round via lazy
-``localCheckpoint`` or durable parquet under ``checkpoint_dir``.
+Edges shrink geometrically; lineage is cut per round by
+``_util.checkpoint`` (lazy ``localCheckpoint`` or durable parquet under
+``checkpoint_dir``).
 
 Similarity edges are an input (``record_id_l``/``record_id_r``/sim),
 so any cheap metric works — token Jaccard from a KeyLinker block, LSH
@@ -41,17 +42,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mismo_spark._util import checkpoint
 from mismo_spark.types.linkage import ID_L, ID_R
 
 _U, _V = "u", "v"
-
-
-def _chk(df: DataFrame, checkpoint_dir: str | None, tag: str) -> DataFrame:
-    if checkpoint_dir is None:
-        return df.localCheckpoint(eager=False)
-    path = f"{checkpoint_dir}/{tag}.parquet"
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
 
 
 def _sym(edges: DataFrame, sim_col: str, threshold: float) -> DataFrame:
@@ -80,7 +74,7 @@ def canopy_centers(
     # edges are often an expensive derivation (token Jaccard over
     # candidate pairs) — materialize once instead of re-evaluating per
     # action
-    te = _chk(_sym(edges, sim_col, tight), checkpoint_dir, "canopy_edges_init")
+    te = checkpoint(_sym(edges, sim_col, tight), checkpoint_dir, "canopy_edges_init")
     act = records.select("record_id").distinct()
     centers: DataFrame | None = None
 
@@ -90,7 +84,7 @@ def canopy_centers(
         # duplicate keys, and the dedup shuffle would be pure overhead)
         blocked = te.filter(F.col(_V) < F.col(_U)).select(F.col(_U).alias("record_id"))
         round_centers = act.join(blocked, "record_id", "left_anti")
-        round_centers = _chk(round_centers, checkpoint_dir, f"canopy_centers_{rnd}")
+        round_centers = checkpoint(round_centers, checkpoint_dir, f"canopy_centers_{rnd}")
         centers = (
             round_centers if centers is None else centers.unionByName(round_centers)
         )
@@ -102,14 +96,14 @@ def canopy_centers(
             act.join(round_centers, "record_id", "left_anti")
             .join(covered, "record_id", "left_anti")
         )
-        act = _chk(act, checkpoint_dir, f"canopy_active_{rnd}")
+        act = checkpoint(act, checkpoint_dir, f"canopy_active_{rnd}")
         if act.isEmpty():
             return centers
         te = (
             te.join(act.withColumnRenamed("record_id", _U), _U, "left_semi")
             .join(act.withColumnRenamed("record_id", _V), _V, "left_semi")
         )
-        te = _chk(te, checkpoint_dir, f"canopy_edges_{rnd}")
+        te = checkpoint(te, checkpoint_dir, f"canopy_edges_{rnd}")
 
     raise RuntimeError(f"canopy_centers did not converge in {max_rounds} rounds")
 

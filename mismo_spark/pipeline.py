@@ -10,16 +10,18 @@ write → record path (``DedupePipeline._artefact``).  Each artefact's
 manifest entry carries its input fingerprint (the stage's parameters
 chained onto ``input_identity`` of the pages); a parquet stage's also
 carries its row count and the rows of each file it wrote, read on the
-driver from the footers just written — no Spark job.  An artefact's
-entry is dropped before it is rewritten and recorded only once the
-write is done, and the manifest is replaced atomically, so a run that
-fails part way never leaves an entry for a half-written artefact.  A
-resumed run replays completed stages from disk and recomputes only
-what's missing ("resumable from any checkpointed stage", BASELINE.json
-north_rule).  ``work_dir`` is a local or mounted path: the manifest,
-lookups and footer reads use the driver's file system.  mismo's
-analogue is per-stage ``Linkage.to_parquets``
-(mismo/linkage/_linkage.py:103-132).
+driver from the footers just written — no Spark job.  A stage is read
+back with the schema in its footer, so the read infers nothing; that
+reader (``_util.read_parquet``) is shared with the streaming cluster
+state.  An artefact's entry is dropped before it is rewritten and
+recorded only once the write is done, and the manifest is replaced
+atomically, so a run that fails part way never leaves an entry for a
+half-written artefact.  A resumed run replays completed stages from
+disk and recomputes only what's missing ("resumable from any
+checkpointed stage", BASELINE.json north_rule).  ``work_dir`` is a
+local or mounted path: the manifest, lookups and footer reads use the
+driver's file system.  mismo's analogue is per-stage
+``Linkage.to_parquets`` (mismo/linkage/_linkage.py:103-132).
 """
 
 from __future__ import annotations
@@ -33,7 +35,6 @@ from dataclasses import dataclass, field
 import pyarrow.dataset as pa_dataset
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from mismo_spark.cluster.cc import connected_components
 from mismo_spark.compare.enum import EnumComparer, compare
@@ -47,7 +48,7 @@ from mismo_spark.sets.compare import jaccard_distinct
 from mismo_spark.text.features import tokenize
 from mismo_spark.text.similarity import jaro_winkler_similarity, levenshtein_ratio
 from mismo_spark.types.linkage import ID_L, ID_R, Linkage
-from mismo_spark._util import should_broadcast
+from mismo_spark._util import read_parquet, should_broadcast
 
 
 def normalized_domain(url_col) -> F.Column:
@@ -100,11 +101,6 @@ def input_identity(pages: DataFrame) -> list:
     return identity
 
 
-# the Spark schema of the rows, which every parquet file Spark writes
-# carries in its footer
-_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
-
-
 def _write_parquet(df: DataFrame, path: str) -> dict:
     """Write a stage and take its row counts, per file, from the
     footers just written: a driver-side read, no Spark job.  (The
@@ -117,13 +113,6 @@ def _write_parquet(df: DataFrame, path: str) -> dict:
         "n_partitions": len(counts),
         "partition_counts": counts,
     }
-
-
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Read a stage back with the schema from its footer, so the read
-    infers nothing and runs no Spark job."""
-    meta = pa_dataset.dataset(path, format="parquet").schema.metadata
-    return spark.read.schema(StructType.fromJson(json.loads(meta[_SPARK_SCHEMA]))).parquet(path)
 
 
 def _write_weights(weights: Weights, path: str) -> dict:
@@ -300,7 +289,7 @@ class DedupePipeline:
     def _stage(self, spark: SparkSession, name: str, fingerprint: str, compute) -> DataFrame:
         """Run-or-resume one parquet stage.  The checkpoint doubles as
         the lineage cut between stages."""
-        read = lambda path: _read_parquet(spark, path)  # noqa: E731
+        read = lambda path: read_parquet(spark, path)  # noqa: E731
         return self._artefact(name, fingerprint, f"{name}.parquet", compute, _write_parquet, read)
 
     # ------------------------------------------------------------------

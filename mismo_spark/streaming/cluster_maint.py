@@ -19,6 +19,11 @@ symlink-style via versioned subdirs):
   state_dir/records/v{batch_id}/       accumulated blocking features
   state_dir/LATEST                     text file: last committed version
 
+``state_dir`` is on the driver's file system (LATEST is written with
+``os.replace``), and each version is read back with the Spark schema in
+its parquet footer (``_util.read_parquet``, shared with the batch
+pipeline), so reading the state infers nothing and runs no Spark job.
+
 A crashed batch leaves LATEST pointing at the previous version, and the
 streaming checkpoint replays the micro-batch — write-then-commit gives
 effectively-once state updates on top of the file source's exactly-once
@@ -32,6 +37,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mismo_spark._util import read_parquet
 from mismo_spark.cluster.incremental import incremental_components
 from mismo_spark.linker.key import KeyLinker
 
@@ -58,7 +64,7 @@ def read_assignments(spark: SparkSession, state_dir: str) -> DataFrame | None:
     v = _latest_version(state_dir)
     if v is None:
         return None
-    return spark.read.parquet(os.path.join(state_dir, "assignments", v))
+    return read_parquet(spark, os.path.join(state_dir, "assignments", v))
 
 
 def incremental_cluster_stream(
@@ -115,11 +121,9 @@ def incremental_cluster_stream(
         new = _keyed(batch)
         prev_v = _latest_version(state_dir)
         if prev_v is not None:
-            known = spark.read.parquet(
-                os.path.join(state_dir, "records", prev_v)
-            )
-            assignments = spark.read.parquet(
-                os.path.join(state_dir, "assignments", prev_v)
+            known = read_parquet(spark, os.path.join(state_dir, "records", prev_v))
+            assignments = read_parquet(
+                spark, os.path.join(state_dir, "assignments", prev_v)
             )
         else:
             known = seed_records

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 from contextlib import contextmanager
 from types import SimpleNamespace
 
@@ -47,6 +48,23 @@ def broadcast_threshold(spark, value: str):
         yield
     finally:
         spark.conf.set(_THRESHOLD, old)
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Collects the ids of the Spark jobs run in the block, tagged with
+    a job group of their own."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    jobs = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc._jsc.clearJobGroup()
+        # the status tracker learns of a job from the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture

@@ -9,7 +9,7 @@ import random
 import pytest
 
 from mismo_spark import connected_components
-from tests.conftest import broadcast_threshold, get_clusters
+from tests.conftest import broadcast_threshold, get_clusters, spark_jobs
 
 # "star" takes the driver finish on these small graphs; "star-rounds"
 # is star with broadcasting off, so the large-star/small-star rounds run
@@ -139,6 +139,30 @@ def test_parquet_checkpointing(spark, tmp_path, algo):
         connected_components(links, algorithm=algo, checkpoint_dir=str(tmp_path))
     )
     assert got == {frozenset({0, 1, 10}), frozenset({9, 20})}
+
+
+def test_parquet_checkpoint_runs_only_its_write(spark, tmp_path):
+    """A parquet checkpoint reads itself back with the frame's schema:
+    its write is the one Spark job, and the rows and schema are those a
+    bare read (which infers the schema in a job of its own) gives, for
+    array, struct and non-nullable columns alike."""
+    from pyspark.sql import functions as F
+
+    from mismo_spark._util import checkpoint
+
+    df = spark.range(6).select(
+        "id",
+        F.array("id", F.lit(7)).alias("ids"),
+        F.struct(F.col("id").alias("a"), F.array(F.lit("x")).alias("b")).alias("s"),
+        F.when(F.col("id") > 2, F.col("id")).alias("maybe"),
+    )
+    assert not df.schema["id"].nullable
+    with spark_jobs(spark) as jobs:
+        got = checkpoint(df, str(tmp_path), "frame")
+    assert len(jobs) == 1
+    bare = spark.read.parquet(str(tmp_path / "frame.parquet"))
+    assert got.schema == bare.schema
+    assert _rows(got) == _rows(bare) == _rows(df)
 
 
 def _rows(df):

@@ -11,9 +11,11 @@ from pyspark.sql import functions as F
 from mismo_spark.cluster.cc import connected_components
 from mismo_spark.linker.key import KeyLinker
 from mismo_spark.streaming.cluster_maint import (
+    _commit_version,
     incremental_cluster_stream,
     read_assignments,
 )
+from tests.conftest import spark_jobs
 
 SCHEMA = "record_id long, key string"
 
@@ -96,3 +98,21 @@ def test_incremental_cluster_stream_no_seed(spark, tmp_path, fold):
 )
 def test_stream_on_spark_path(spark, tmp_path, fold, case):
     case(spark, tmp_path, fold)
+
+
+def test_read_assignments_runs_no_job(spark, tmp_path):
+    """The state is read back with the schema in its footer: no Spark
+    job, and the rows and schema a bare read gives."""
+    state_dir = str(tmp_path / "state")
+    assert read_assignments(spark, state_dir) is None
+    path = str(tmp_path / "state" / "assignments" / "v3")
+    spark.createDataFrame(
+        [(1, 1), (2, 1), (5, 5)], "record_id long, component long"
+    ).write.parquet(path)
+    _commit_version(state_dir, "v3")
+    with spark_jobs(spark) as jobs:
+        got = read_assignments(spark, state_dir)
+    assert jobs == []
+    bare = spark.read.parquet(path)
+    assert got.schema == bare.schema
+    assert sorted(got.collect()) == sorted(bare.collect())
