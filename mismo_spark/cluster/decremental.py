@@ -2,25 +2,27 @@
 batches) — the half of incremental CC that ``incremental.py`` cannot
 do.
 
-Additions only ever MERGE components, so an old component can re-enter
-the sub-problem as its star edges (connectivity preserved).  A deleted
-edge can SPLIT a component, and the star edges would paper over the
-split — so the affected components must be re-clustered from their
-SURVIVING real edges.  The identity:
+Additions only ever MERGE components, so ``incremental_components``
+folds them over the component graph (an old component enters as its
+label).  A deleted edge can SPLIT a component, and its label would
+paper over the split — so the components a removed edge touches must
+be re-clustered from their SURVIVING real edges.  A mixed batch runs
+in two steps:
 
-  * components no removed/added edge touches keep their assignment
-    rows verbatim (one anti-join), and
-  * the subgraph induced by touched components — their remaining real
-    edges plus the added batch — re-clusters with ordinary CC, giving
-    exactly the labels a full recompute over (links − removed ∪ added)
-    would.
+  1. removals: components no removed edge touches keep their
+     assignment rows verbatim (one anti-join), and the subgraph induced
+     by the touched components — their remaining real edges —
+     re-clusters with ordinary CC, giving exactly the labels a full
+     recompute over ``links − removed`` would;
+  2. additions and new records: folded into that assignment by
+     ``incremental_components``.
 
 At 10^12 records the daily maintenance batch (retracted pages, GDPR
 deletes, re-scored links dropping below threshold) touches a tiny
 fraction of components; every shuffle here is sized by the TOUCHED
-components' edges, not the corpus.  ``links`` (the full surviving edge
-store, e.g. the Iceberg links table) is only ever semi-joined — never
-re-clustered wholesale.
+components' edges or by the added batch, not the corpus.  ``links``
+(the full surviving edge store, e.g. the Iceberg links table) is only
+ever semi-joined — never re-clustered wholesale.
 
 Labels stay canonical (minimum record id of the component), so
 ``maintain == from-scratch`` is byte-exact; tests assert it literally.
@@ -32,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mismo_spark.cluster.cc import connected_components
+from mismo_spark.cluster.incremental import incremental_components
 from mismo_spark.types.linkage import ID_L, ID_R
 
 
@@ -68,82 +71,55 @@ def maintain_components(
     ``new_records`` (column ``record_id``) adds singletons no edge
     mentions.
     """
-    if added is None and removed is None and new_records is None:
-        return assignments
-    # materialization policy (same as incremental_components): every
-    # relation sized by the CHANGE batch or the touched components is
-    # checkpointed at its first use, because multiple consumers would
-    # otherwise re-execute its upstream plan; the corpus-sized inputs
-    # (links, assignments — parquet checkpoints in production) stay
-    # lazy and are consumed a bounded number of times.
-    edges = _pair_key(links.select(ID_L, ID_R))
-
+    kw = dict(max_iter=max_iter, algorithm=algorithm, checkpoint_dir=checkpoint_dir)
     if removed is not None:
+        # materialization policy (as in incremental_components): every
+        # relation sized by the removed batch or the touched components
+        # is checkpointed at its first use, because multiple consumers
+        # would otherwise re-execute its upstream plan; the corpus-sized
+        # inputs (links, assignments — parquet checkpoints in
+        # production) stay lazy and are consumed a bounded number of
+        # times.
+        edges = _pair_key(links.select(ID_L, ID_R))
         rm_keys = (
             _pair_key(removed.select(ID_L, ID_R))
             .select("__a", "__b")
             .distinct()
             .localCheckpoint(eager=True)
         )
-        # only edges actually present can split anything; checkpointing
-        # the (small) intersection stops rm's three consumers from
-        # re-running the full-edge-set semi-join
-        rm = (
-            edges.select("__a", "__b")
-            .join(rm_keys, ["__a", "__b"], "left_semi")
+        # only edges actually present can split anything; their
+        # endpoints name the touched components
+        rm_ends = edges.join(rm_keys, ["__a", "__b"], "left_semi").select(
+            F.explode(F.array(F.col("__a"), F.col("__b"))).alias("record_id")
+        )
+        touched_comps = (
+            assignments.join(rm_ends, "record_id", "left_semi")
+            .select("component")
             .distinct()
             .localCheckpoint(eager=True)
         )
+        touched = assignments.join(
+            touched_comps, "component", "left_semi"
+        ).localCheckpoint(eager=True)
+        untouched = assignments.join(touched_comps, "component", "left_anti")
+
+        # a surviving edge of a touched component has BOTH endpoints
+        # inside it, so one semi-join on the left endpoint selects all
         remaining = edges.join(rm_keys, ["__a", "__b"], "left_anti")
-        rm_ends = rm.select(
-            F.explode(F.array(F.col("__a"), F.col("__b"))).alias("record_id")
-        )
-    else:
-        remaining = edges
-        rm_ends = None
+        sub_links = remaining.join(
+            touched.select(F.col("record_id").alias(ID_L)), ID_L, "left_semi"
+        ).select(ID_L, ID_R)
+        sub = connected_components(sub_links, touched.select("record_id"), **kw)
+        assignments = untouched.unionByName(sub)
 
-    add_ends = None
-    if added is not None:
-        add_ends = added.select(
-            F.explode(F.array(F.col(ID_L), F.col(ID_R))).alias("record_id")
-        )
-
-    ends = [e for e in (rm_ends, add_ends) if e is not None]
-    if new_records is not None:
-        ends.append(new_records.select("record_id"))
-    touched_ends = ends[0]
-    for e in ends[1:]:
-        touched_ends = touched_ends.unionByName(e)
-    touched_ends = touched_ends.distinct().localCheckpoint(eager=True)
-
-    touched_comps = (
-        assignments.join(touched_ends, "record_id", "left_semi")
-        .select("component")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    touched = assignments.join(
-        touched_comps, "component", "left_semi"
-    ).localCheckpoint(eager=True)
-    untouched = assignments.join(touched_comps, "component", "left_anti")
-
-    # a surviving edge of a touched component has BOTH endpoints inside
-    # it, so one semi-join on the left endpoint selects all of them
-    sub_links = remaining.join(
-        touched.select(F.col("record_id").alias(ID_L)), ID_L, "left_semi"
-    ).select(ID_L, ID_R)
-    if added is not None:
-        sub_links = sub_links.unionByName(added.select(ID_L, ID_R))
-
-    sub_nodes = touched.select("record_id").unionByName(touched_ends).distinct()
-    sub = connected_components(
-        sub_links,
-        sub_nodes,
-        max_iter=max_iter,
-        algorithm=algorithm,
-        checkpoint_dir=checkpoint_dir,
-    )
-    return untouched.unionByName(sub)
+    if added is None:
+        if new_records is None:
+            return assignments
+        # new records only: each enters the fold as a self-loop
+        added, new_records = new_records.select(
+            F.col("record_id").alias(ID_L), F.col("record_id").alias(ID_R)
+        ), None
+    return incremental_components(assignments, added, new_records, **kw)
 
 
 def decremental_components(

@@ -2,51 +2,46 @@
 existing assignment without re-clustering the corpus.
 
 At 10^12 records a daily crawl adds ~10^6-10^9 edges; re-running CC over
-every historical edge is the thing that does not scale.  The identity
-this module exploits: components of (old graph ∪ new edges) decompose
-into
+every historical edge is the thing that does not scale.  The fold works
+on the component graph: every old component labels all its members with
+its minimum id, so it enters the batch's sub-problem as that one label,
+never as its rows.
 
-  * components no new edge touches — their assignment rows are already
-    the fixed point and pass through untouched (one anti-join), and
-  * the subgraph induced by TOUCHED old components plus the new batch —
-    each old component is re-entered as its star edges
-    (record_id → component label), which preserve its connectivity
-    exactly, so running ordinary CC on that (small) subgraph gives the
-    same labels a full recompute would.
+  1. One semi-join of ``assignments`` against the batch's ids finds the
+     component of each batch endpoint (at most one row per id).
+  2. Each link ``(u, v)`` becomes ``(rep(u), rep(v))``: the
+     representative is the endpoint's old component, or the id itself
+     when it is new.
+  3. CC over those representative edges, a graph the size of the batch,
+     merges old components and new ids.
+  4. ``assignments`` is relabelled through one join on ``component``
+     (each merged component to its new label), plus one row per new id.
 
-Labels stay canonical (minimum record id of the component): an
-untouched component's min cannot change, and the sub-CC re-derives the
-min over every merged group.  ``incremental == from-scratch`` is
-asserted literally in tests/test_incremental_cc.py.
+Labels stay canonical (minimum record id of the component): an old
+component's label is its own minimum, so the minimum over the
+representatives a merge joins is the minimum of the merged component.
+``incremental == from-scratch`` is asserted literally in
+tests/test_incremental_cc.py.
 
 Plan shape: with ``algorithm="star"`` and integral ids, the batch's
-links and new record ids are collected once as Arrow, capped at
-``threshold // 16`` rows of two fixed-width ids, so the driver holds no
-more than ``spark.sql.autoBroadcastJoinThreshold`` per collect.  When
-the batch fits, its ids go back as a broadcast relation, and one query
-finds the touched components' rows (a broadcast semi-join of the ids
-against ``assignments``, then one on the touched components); that
-query is collected under the same cap, solved by the same union-find
-as ``connected_components``' driver finish, and the result is
-``assignments`` anti-joined against the solved ids plus the solved
-rows.  Touched rows that reach the cap go on to the Spark path below
-from the same broadcast relations, reading the touched rows the
-collect already checkpointed.  A batch that reaches the cap, a
-threshold of ``-1``, string ids and ``naive`` find the touched
-components with two hash joins (shuffles sized by the NEW batch)
-instead.  The Spark path then partitions the assignment table with
-one semi/anti-join and runs ``connected_components`` over touched+new
-only.  Either way the caller's links plan runs once, and the Spark
-path reads ``assignments`` three times per row (touched components,
-touched rows, untouched rows): the touched components are
-checkpointed, or, after a give-up, taken from the touched rows.
+links and one self-loop per new record are collected once as Arrow,
+capped at ``threshold // 16`` rows of two fixed-width ids.  When the
+rows and the distinct ids each fit, the driver holds no more than
+``spark.sql.autoBroadcastJoinThreshold`` per collect: the ids go back
+as a broadcast relation, step 1 is collected (no more rows than the
+ids), step 3 is the union-find of ``connected_components``' driver
+finish, and the relabel map and the new rows are local relations.
+Otherwise (a batch over the cap, a threshold of ``-1``, string ids,
+``naive``), step 1 is checkpointed and step 3 is
+``connected_components`` over the representative edges.  Either way
+the caller's links plan runs once, and ``assignments`` is read twice
+per row: the lookup and the relabel.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -82,85 +77,63 @@ def incremental_components(
     ``new_records`` (optional, column ``record_id``) adds singleton
     rows for genuinely new records that no new link mentions.
 
-    With ``algorithm="star"``, integral ids, and a batch and touched
-    components that each fit the broadcast threshold, the fold is
-    solved on the driver (see the module docstring); ``max_iter`` and
+    With ``algorithm="star"``, integral ids, and a batch whose rows and
+    distinct ids each fit the broadcast threshold, the fold is solved
+    on the driver (see the module docstring); ``max_iter`` and
     ``checkpoint_dir`` then go unused, as they reach only the Spark
-    path's sub-graph CC.
+    path's CC over the representative edges.
     """
-    # materialize the batch-sized relations once — the whole point of
-    # the incremental fold is that everything except `assignments` is
-    # sized by the NEW batch, so checkpointing is cheap while
-    # re-executing the batch's upstream plan (often a scoring pipeline)
-    # per consumer is not.  `assignments` itself is corpus-sized and
-    # typically already a parquet checkpoint, so it stays lazy.  The
-    # links checkpoint is filled by its first reader: the batch's
-    # collect, or the `ends` checkpoint below.
+    # the batch's upstream plan (often a scoring pipeline) runs once:
+    # its first reader, the driver collect or the lookup below, fills
+    # this checkpoint.  `assignments` is corpus-sized and typically
+    # already a parquet checkpoint, so it stays lazy.
     nl = new_links.select(ID_L, ID_R).localCheckpoint(eager=False)
-    spark = nl.sparkSession
-    cap = _broadcast_budget(spark) // _EDGE_BYTES
+    cap = _broadcast_budget(nl.sparkSession) // _EDGE_BYTES
     id_type = _fold_id_type(assignments, nl, new_records) if algorithm == "star" else None
-    batch = None
     if id_type is not None and cap > 0:
         batch = _collect_batch(nl, new_records, id_type, cap)
-    if batch is None:
-        ends = nl.select(
-            F.explode(F.array(F.col(ID_L), F.col(ID_R))).alias("record_id")
-        ).distinct()
-        if new_records is not None:
-            ends = ends.unionByName(new_records.select("record_id")).distinct()
-        ends = ends.localCheckpoint(eager=True)
-    else:
-        # the batch's ids are already on the driver: they go back as a
-        # local relation, and the touched components (at most one per
-        # id, so no more bytes than the batch) are broadcast too
-        ids = pa.chunked_array(batch.column(ID_L).chunks + batch.column(ID_R).chunks)
-        ends = F.broadcast(
-            spark.createDataFrame(
-                pa.table({"record_id": pc.unique(ids)}),
-                f"record_id {id_type.simpleString()}",
-            )
+        if batch is not None:
+            return _driver_fold(assignments, *batch, id_type)
+
+    edges = nl
+    if new_records is not None:
+        # a new record no link mentions enters as a self-loop
+        edges = edges.unionByName(
+            new_records.select(F.col("record_id").alias(ID_L), F.col("record_id").alias(ID_R))
         )
+    ends = edges.select(F.explode(F.array(ID_L, ID_R)).alias("record_id"))
+    # sized by the batch and read by both endpoint joins and the new
+    # rows: checkpointed, so this is the only scan of `assignments`
+    # before the relabel
+    lookup = (
+        assignments.join(ends, "record_id", "left_semi")
+        .select("record_id", "component")
+        .localCheckpoint(eager=True)
+    )
+    reps = (
+        edges.join(lookup.toDF(ID_L, "__cl"), ID_L, "left")
+        .join(lookup.toDF(ID_R, "__cr"), ID_R, "left")
+        .select(
+            F.coalesce("__cl", ID_L).alias(ID_L), F.coalesce("__cr", ID_R).alias(ID_R)
+        )
+    )
+    labels = connected_components(
+        reps, max_iter=max_iter, algorithm=algorithm, checkpoint_dir=checkpoint_dir
+    )
+    # an old component is a record of `assignments`; a new id is not
+    new_rows = labels.join(
+        lookup.select(F.col("component").alias("record_id")), "record_id", "left_anti"
+    )
+    return _relabel(assignments, labels.toDF("component", "__to"), new_rows)
 
-    touched_comps = assignments.join(ends, "record_id", "left_semi").select(
-        "component"
-    )
-    if batch is None:
-        # sized by the batch and read twice (the touched rows, then the
-        # untouched anti-join): checkpointed, so its scan of
-        # `assignments` runs once, filled by its first reader
-        touched_comps = touched_comps.distinct().localCheckpoint(eager=False)
-        touched = assignments.join(touched_comps, "component", "left_semi")
-        touched = touched.localCheckpoint(eager=True)
-    else:
-        touched = assignments.join(F.broadcast(touched_comps), "component", "left_semi")
-        # filled by the fold's collect, which a give-up then reuses
-        touched = touched.localCheckpoint(eager=False)
-        done = _driver_fold(assignments, batch, touched, id_type, cap)
-        if done is not None:
-            return done
-        # a give-up takes the touched components from those rows, not
-        # from `assignments` again; they are no more than the batch's
-        # ids, so they still broadcast
-        touched_comps = F.broadcast(touched.select("component").distinct())
-    untouched = assignments.join(touched_comps, "component", "left_anti").select(
-        "record_id", "component"
-    )
 
-    # a touched component re-enters as its star edges — connectivity
-    # (and therefore the merged components) is preserved exactly
-    star_edges = touched.select(
-        F.col("record_id").alias(ID_L), F.col("component").alias(ID_R)
+def _relabel(assignments: DataFrame, moves: DataFrame, new_rows: DataFrame) -> DataFrame:
+    """``assignments`` with each ``moves.component`` relabelled to its
+    ``__to``, plus ``new_rows``."""
+    old = assignments.join(moves, "component", "left").select(
+        "record_id", F.coalesce("__to", "component").alias("component")
     )
-    sub_nodes = touched.select("record_id").unionByName(ends).distinct()
-    sub = connected_components(
-        nl.unionByName(star_edges),
-        sub_nodes,
-        max_iter=max_iter,
-        algorithm=algorithm,
-        checkpoint_dir=checkpoint_dir,
-    )
-    return untouched.unionByName(sub)
+    return old.unionByName(new_rows)
 
 
 def _fold_id_type(
@@ -186,47 +159,61 @@ def _pairs(df: DataFrame, u: str, v: str, id_type) -> DataFrame:
 
 def _collect_batch(
     nl: DataFrame, new_records: DataFrame | None, id_type, cap: int
-) -> pa.Table | None:
-    """The batch's links, plus one self-loop per new record (a node
-    that joins nothing), as Arrow; None when ``cap`` rows come back, so
-    the driver never holds more than the broadcast budget."""
+) -> tuple[pa.Table, pa.Array] | None:
+    """The batch's links, plus one self-loop per new record, as Arrow,
+    and its distinct non-NULL ids; None when ``cap`` rows come back or
+    the ids reach ``cap``, so neither the batch nor the lookup of its
+    ids holds more than the broadcast budget on the driver."""
     batch = _pairs(nl, ID_L, ID_R, id_type)
     if new_records is not None:
         batch = batch.unionByName(_pairs(new_records, "record_id", "record_id", id_type))
     links = batch.limit(cap).toArrow()
-    return links if links.num_rows < cap else None
+    if links.num_rows >= cap:
+        return None
+    ends = pa.concat_arrays([links.column(c).combine_chunks() for c in (ID_L, ID_R)])
+    ids = pc.unique(ends).drop_null()
+    return (links, ids) if len(ids) < cap else None
 
 
 def _driver_fold(
-    assignments: DataFrame, links: pa.Table, touched: DataFrame, id_type, cap: int
-) -> DataFrame | None:
-    """The fold solved on the driver from the collected batch, or None
-    when the touched rows, capped at ``cap`` (``budget // 16``), come
-    back full."""
+    assignments: DataFrame, links: pa.Table, ids: pa.Array, id_type
+) -> DataFrame:
+    """The fold solved on the driver from the collected batch and its
+    distinct non-NULL ``ids``."""
     if links.num_rows == 0:
         return assignments.select("record_id", "component")
-    rows = _pairs(touched, "record_id", "component", id_type).limit(cap).toArrow()
-    if rows.num_rows >= cap:
-        return None
-
-    # a touched component re-enters as its star edges, as on the Spark
-    # path; the output is the batch's ids and the touched records
-    cu, cv, ids, roots = _solve_edges(
-        pa.chunked_array(links.column(ID_L).chunks + rows.column(ID_L).chunks),
-        pa.chunked_array(links.column(ID_R).chunks + rows.column(ID_R).chunks),
+    spark = assignments.sparkSession
+    ids_df = spark.createDataFrame(
+        pa.table({"record_id": ids}), f"record_id {id_type.simpleString()}"
     )
-    out = np.concatenate([cu, cv[: links.num_rows]])
-    keep = np.unique(out[out >= 0])
-    solved = _labels_frame(
-        assignments.sparkSession,
-        ids.take(pa.array(keep)),
-        ids.take(pa.array(roots[keep])),
+    lookup = _pairs(
+        assignments.join(F.broadcast(ids_df), "record_id", "left_semi"),
+        "record_id",
+        "component",
         id_type,
-        nulls=bool((out < 0).any()),
-    )
-    untouched = assignments.join(
-        F.broadcast(solved.select("record_id")), "record_id", "left_anti"
+    ).toArrow()
+    members = lookup.column(ID_L).combine_chunks()
+    comps = lookup.column(ID_R).combine_chunks()
+
+    def rep(col: str) -> pa.Array:
+        ends = links.column(col).combine_chunks()
+        return pc.coalesce(comps.take(pc.index_in(ends, value_set=members)), ends)
+
+    cu, cv, reps, roots = _solve_edges(rep(ID_L), rep(ID_R))
+    labels = reps.take(pa.array(roots))
+    old = pc.is_in(reps, value_set=comps)
+    moved = pc.and_(old, pc.not_equal(labels, reps))
+    moves = _labels_frame(
+        spark, reps.filter(moved), labels.filter(moved), id_type, nulls=False
+    ).toDF("component", "__to")
+    new = pc.invert(old)
+    new_rows = _labels_frame(
+        spark,
+        reps.filter(new),
+        labels.filter(new),
+        id_type,
+        nulls=bool((cu < 0).any() or (cv < 0).any()),
     )
     # a local relation is split over up to defaultParallelism partitions,
     # each a file when the caller writes the result
-    return untouched.unionByName(solved.coalesce(1))
+    return _relabel(assignments, F.broadcast(moves), new_rows.coalesce(1))

@@ -8,8 +8,8 @@ committing.  Running CC from scratch per threshold re-clusters the
 whole corpus k times; this module exploits the monotone structure —
 lowering the threshold only ADDS edges, and additions only MERGE
 components — so each step folds just the newly admitted edge band
-into the previous assignment via ``incremental_components``
-(shuffles sized by the band, untouched components pass through).
+into the previous assignment via ``incremental_components`` (each old
+component enters as its label, so the fold is sized by the band).
 
 The fold gives exactly the from-scratch answer at every threshold
 (the incremental==full identity is pytest-pinned in

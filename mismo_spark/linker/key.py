@@ -43,6 +43,24 @@ def _split_spec(spec) -> tuple[object, object]:
     return spec, spec
 
 
+def _pair_estimate(
+    lk: DataFrame, rk: DataFrame, key_cols: list[str], task: str
+) -> DataFrame:
+    """Per key: its row counts (``__nl``, and ``__nr`` for link) and the
+    pairs it would generate, ``__npairs`` (dedupe: n(n−1)/2; link:
+    n_l·n_r), as a double so a hot key cannot overflow it.  One count
+    aggregation per side, joined on the (small) distinct-key tables."""
+    lc = lk.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__nl"))
+    if task == "dedupe":
+        return lc.withColumn(
+            "__npairs", F.col("__nl").cast("double") * (F.col("__nl") - 1) / 2.0
+        )
+    rc = rk.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__nr"))
+    return lc.join(rc, key_cols, "inner").withColumn(
+        "__npairs", F.col("__nl").cast("double") * F.col("__nr")
+    )
+
+
 class KeyLinker:
     """Block where all keys are equal (mismo/linker/_key_linker.py:16-193)."""
 
@@ -155,11 +173,8 @@ class KeyLinker:
         broadcast to both sides; the driver never sees record rows.
         """
         budget = float(self.skew_split)
-        lc = lk.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__nl"))
+        est = _pair_estimate(lk, rk, key_cols, task)
         if task == "dedupe":
-            est = lc.withColumn(
-                "__npairs", F.col("__nl").cast("double") * (F.col("__nl") - 1) / 2.0
-            )
             hot = est.filter(F.col("__npairs") > budget).select(
                 *key_cols,
                 F.greatest(
@@ -168,10 +183,6 @@ class KeyLinker:
                 ).alias("__s"),
             )
         else:
-            rc = rk.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__nr"))
-            est = lc.join(rc, key_cols, "inner").withColumn(
-                "__npairs", F.col("__nl").cast("double") * F.col("__nr")
-            )
             root = F.sqrt(F.lit(budget))
             hot = est.filter(F.col("__npairs") > budget).select(
                 *key_cols,
@@ -274,14 +285,7 @@ class KeyLinker:
         (mismo/linker/_key_linker.py:195-222).  Two cheap count
         aggregations + a join of the (small) distinct-key tables.
         """
-        lc = lk.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__nl"))
-        if task == "dedupe":
-            est = lc.withColumn("__npairs", F.col("__nl") * (F.col("__nl") - 1) / 2)
-        else:
-            rc = rk.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__nr"))
-            est = lc.join(rc, key_cols, "inner").withColumn(
-                "__npairs", F.col("__nl") * F.col("__nr")
-            )
+        est = _pair_estimate(lk, rk, key_cols, task)
         return est.filter(F.col("__npairs") > self.max_pairs).select(*key_cols)
 
     def key_counts(self, df: DataFrame, side: int = 0) -> "KeyCountsTable":
@@ -307,18 +311,10 @@ class KeyLinker:
         task = infer_task(left, right, task or self.task)
         lk = self._keyed(left, 0)
         key_cols = [c for c in lk.columns if c != "record_id"]
-        lc = lk.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__nl"))
-        if task == "dedupe":
-            out = lc.select(
-                *key_cols,
-                (F.col("__nl") * (F.col("__nl") - 1) / 2).cast("long").alias("n"),
-            )
-        else:
-            rk = self._keyed(right, 1)
-            rc = rk.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__nr"))
-            out = lc.join(rc, key_cols, "inner").select(
-                *key_cols, (F.col("__nl") * F.col("__nr")).cast("long").alias("n")
-            )
+        rk = lk if task == "dedupe" else self._keyed(right, 1)
+        out = _pair_estimate(lk, rk, key_cols, task).select(
+            *key_cols, F.col("__npairs").cast("long").alias("n")
+        )
         from mismo_spark.types.counts_table import PairCountsTable
 
         return PairCountsTable(out.orderBy(F.desc("n"), *key_cols))

@@ -5,9 +5,10 @@ as new record batches arrive.
 the loop — each micro-batch is blocked against the corpus AND all
 previously-streamed records, then folded into the persistent
 (record_id, component) assignment with
-``cluster.incremental_components`` (one driver pass when the batch
-fits the broadcast threshold, otherwise shuffles sized by the batch,
-not the corpus).  The result after draining the stream is IDENTICAL to
+``cluster.incremental_components`` (each old component enters as its
+label, so the fold is sized by the batch, not the corpus: one driver
+pass when the batch fits the broadcast threshold, otherwise Spark
+joins).  The result after draining the stream is IDENTICAL to
 re-clustering everything from scratch — the incremental-CC identity,
 asserted in tests/test_incremental_cc.py and again end-to-end here.
 
@@ -92,12 +93,14 @@ def incremental_cluster_stream(
          against themselves (both shuffles sized by the batch, with the
          accumulated side hash-partitioned on the key),
       3. folds the resulting links into the assignment with
-         ``incremental_components``: when the batch's links and the
-         rows of the components they touch each fit
-         ``spark.sql.autoBroadcastJoinThreshold``, they are collected
-         and solved in one driver pass, and the new assignment is the
-         old one minus the solved ids plus the solved rows; otherwise
-         the fold runs as Spark joins and a sub-graph CC,
+         ``incremental_components``: the old components the links
+         touch enter as their labels, and the new assignment is the
+         old one with the merged components relabelled plus a row per
+         new record.  When the batch's rows and distinct ids each fit
+         ``spark.sql.autoBroadcastJoinThreshold``, the batch and its
+         components are collected and solved in one driver pass;
+         otherwise the fold runs as Spark joins and a CC over a graph
+         the size of the batch,
       4. commits new ``records``/``assignments`` versions + LATEST.
 
     ``corpus``/``initial_assignments`` seed the state (e.g. from a

@@ -70,8 +70,7 @@ def spark_jobs(spark):
 @pytest.fixture
 def folds(monkeypatch):
     """Results of every driver fold ``incremental_components`` solves
-    from a collected batch (None where the touched rows sent it to the
-    Spark path)."""
+    from a collected batch."""
     from mismo_spark.cluster import incremental
 
     seen = []
@@ -92,9 +91,9 @@ def fold(request, monkeypatch, folds):
     the default threshold, where every fold of these small batches must
     be solved on the driver, unless the test sets ``fold.driver =
     False`` (ids the fold does not take).  "spark" never collects the
-    batch, so the fold runs its Spark joins; the sub-graph's
-    ``connected_components`` keeps its own driver finish, as the star
-    rounds are covered by tests/test_cc.py."""
+    batch, so the fold runs its Spark joins; the representative
+    edges' ``connected_components`` keeps its own driver finish, as the
+    star rounds are covered by tests/test_cc.py."""
     from mismo_spark.cluster import incremental
 
     spark_path = getattr(request, "param", "driver") == "spark"
@@ -103,7 +102,6 @@ def fold(request, monkeypatch, folds):
         monkeypatch.setattr(incremental, "_collect_batch", lambda *args: None)
     yield path
     assert bool(folds) == path.driver
-    assert all(r is not None for r in folds)
 
 
 @pytest.fixture

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from mismo_spark.cluster.cc import connected_components
 from mismo_spark.cluster.incremental import incremental_components
-from tests.conftest import broadcast_threshold
+from tests.conftest import broadcast_threshold, spark_jobs
 
 
 def _edges(spark, pairs):
@@ -115,7 +115,10 @@ def _fold_equals_scratch(
         )
     )
     every = set(old_ids) | set(new_ids or []) | {x for p in new_pairs for x in p}
-    full = connected_components(edges(old_pairs + new_pairs), ids(sorted(every)))
+    # a NULL endpoint joins nothing; as a record it is one (NULL, NULL) row
+    full = connected_components(
+        edges(old_pairs + new_pairs), ids(sorted(every, key=lambda x: (x is None, x)))
+    )
     assert inc == _rows(full)
 
 
@@ -137,9 +140,11 @@ OLD_IDS = list(range(12))
         ([(5, 50), (5, 50), (50, 5), (50, 50), (11, 11)], [50]),
         # a merge of two old components
         ([(2, 7)], []),
+        # NULL endpoints, next to a link to an old component
+        ([(2, None), (None, 40), (40, 41), (None, None)], [42]),
     ],
     ids=["id-in-assignments", "no-new-records", "empty", "empty-no-records",
-         "duplicates-self-loops", "merge-old"],
+         "duplicates-self-loops", "merge-old", "null-endpoint"],
 )
 @BOTH_PATHS
 def test_fold_rows_equal_scratch(spark, fold, new_pairs, new_ids):
@@ -184,31 +189,46 @@ BIG_NEW = [(39, 100), (100, 101)]
 BIG_NEW_IDS = [100, 101]
 
 
-@pytest.mark.parametrize(
-    "rows", [len(BIG_NEW) + len(BIG_NEW_IDS), 40], ids=["batch", "touched"]
-)
-def test_fold_over_budget_runs_spark_path(spark, folds, collects, rows):
-    """A threshold one row short of the batch's rows (links plus one
-    self-loop per new record) or of the touched rows: the fold gives up
-    and the Spark path runs, and no collect holds more than the
-    threshold (16 bytes a row of two longs)."""
+def _big_fold(spark, collects, threshold, new_ids):
+    """Rows of the fold of ``BIG_NEW`` (and ``new_ids``) into the
+    40-record component under ``threshold``, and of a from-scratch CC;
+    ``collects`` then holds the fold's collects only."""
     old = connected_components(_edges(spark, BIG_OLD), _ids(spark, range(40)))
-    want = _rows(
-        connected_components(
-            _edges(spark, BIG_OLD + BIG_NEW), _ids(spark, [*range(40), *BIG_NEW_IDS])
-        )
-    )
+    every = [*range(40), 100, 101]
+    want = _rows(connected_components(_edges(spark, BIG_OLD + BIG_NEW), _ids(spark, every)))
+    new = None if new_ids is None else _ids(spark, new_ids)
     collects.clear()
-    threshold = 16 * rows - 1
     with broadcast_threshold(spark, str(threshold)):
-        got = _rows(
-            incremental_components(old, _edges(spark, BIG_NEW), _ids(spark, BIG_NEW_IDS))
-        )
+        return _rows(incremental_components(old, _edges(spark, BIG_NEW), new)), want
+
+
+@pytest.mark.parametrize(
+    "new_ids,threshold",
+    # 4 batch rows (links plus one self-loop per new record) over a
+    # 3-row threshold; 2 rows that fit it, but 3 distinct ids that do not
+    [(BIG_NEW_IDS, 16 * 4 - 1), (None, 16 * 3)],
+    ids=["batch", "ids"],
+)
+def test_fold_over_budget_runs_spark_path(spark, folds, collects, new_ids, threshold):
+    """A batch whose rows or distinct ids reach the threshold (16 bytes
+    a row of two longs) is never solved on the driver: the Spark path
+    runs, and no collect holds more than the threshold."""
+    got, want = _big_fold(spark, collects, threshold, new_ids)
     assert got == want
-    # an over-budget batch is never solved; touched rows over it are
-    # found by the one touched query the Spark path then reuses
-    assert folds == ([None] if rows == 40 else [])
+    assert folds == []
     assert collects and max(collects) * 16 <= threshold
+
+
+def test_component_over_budget_folds_on_driver(spark, folds, collects):
+    """A touched component 8 times over the threshold (40 rows; the
+    threshold holds 5) folds on the driver all the same: it enters as
+    its label, so no collect holds more than the batch's rows or ids."""
+    threshold = 16 * 5
+    got, want = _big_fold(spark, collects, threshold, BIG_NEW_IDS)
+    assert got == want
+    assert len(folds) == 1
+    # the batch's 4 rows, then one lookup row: record 39's component
+    assert collects == [4, 1]
 
 
 @pytest.mark.parametrize(
@@ -217,9 +237,10 @@ def test_fold_over_budget_runs_spark_path(spark, folds, collects, rows):
     ids=["driver", "spark", "batch-over", "touched-over"],
 )
 def test_links_plan_runs_once(spark, threshold):
-    """The caller's links plan runs once per row on the driver fold,
-    on the Spark path, and when the fold collects the links and then
-    finds them, or the touched rows, over the budget."""
+    """The caller's links plan runs once per row on the driver fold
+    (also with the touched component over the budget), on the Spark
+    path, and when the fold collects the links and then finds them over
+    the budget."""
     acc = spark.sparkContext.accumulator(0)
 
     def seen(x):
@@ -240,12 +261,11 @@ def test_links_plan_runs_once(spark, threshold):
     assert acc.value == len(BIG_NEW)
 
 
-def test_touched_over_budget_reads_assignments_as_spark_path(spark):
-    """A fold that finds the touched rows over the budget goes on from
-    the checkpoint its touched query filled: it reads ``assignments``
-    as often as the Spark path does, three times per row: the touched
-    components, the touched rows, the untouched anti-join (whose
-    touched components come from a checkpoint, not a fourth read)."""
+def test_both_paths_read_assignments_twice(spark, folds):
+    """The fold reads ``assignments`` exactly twice per row, on the
+    driver (with the touched component over the budget) and on the
+    Spark path: once to look up the batch's components, once to
+    relabel them.  No touched row is read again."""
     links = _edges(spark, BIG_NEW)
     base = connected_components(_edges(spark, BIG_OLD), _ids(spark, range(40)))
     base = base.localCheckpoint()
@@ -266,5 +286,25 @@ def test_touched_over_budget_reads_assignments_as_spark_path(spark):
         assert got == [(i, 0) for i in [*range(40), 100, 101]]
         return acc.value
 
-    assert reads(str(16 * 40 - 1)) == 3 * 40
-    assert reads("-1") == 3 * 40
+    assert reads(str(16 * 40 - 1)) == 2 * 40
+    assert len(folds) == 1
+    assert reads("-1") == 2 * 40
+    assert len(folds) == 1
+
+
+def test_driver_fold_runs_three_jobs(spark, folds):
+    """A fold solved on the driver runs at most 3 Spark jobs before the
+    caller reads its result: the batch's collect, then the broadcast of
+    the batch's ids and the lookup's collect.  Re-entering the touched
+    components as rows took 4."""
+    old = connected_components(_edges(spark, OLD_PAIRS), _ids(spark, OLD_IDS))
+    old = old.localCheckpoint()
+    links, new = _edges(spark, [(2, 7), (20, 21)]), _ids(spark, [20, 21, 22])
+    with spark_jobs(spark) as jobs:
+        out = incremental_components(old, links, new)
+    assert len(folds) == 1
+    assert len(jobs) <= 3
+    want = connected_components(
+        _edges(spark, OLD_PAIRS + [(2, 7), (20, 21)]), _ids(spark, [*OLD_IDS, 20, 21, 22])
+    )
+    assert _rows(out) == _rows(want)
