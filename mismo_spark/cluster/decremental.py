@@ -55,8 +55,6 @@ def maintain_components(
     added: DataFrame | None = None,
     removed: DataFrame | None = None,
     new_records: DataFrame | None = None,
-    max_iter: int = 50,
-    algorithm: str = "star",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """→ DataFrame(record_id, component), identical to
@@ -71,7 +69,6 @@ def maintain_components(
     ``new_records`` (column ``record_id``) adds singletons no edge
     mentions.
     """
-    kw = dict(max_iter=max_iter, algorithm=algorithm, checkpoint_dir=checkpoint_dir)
     if removed is not None:
         # materialization policy (as in incremental_components): every
         # relation sized by the removed batch or the touched components
@@ -109,7 +106,9 @@ def maintain_components(
         sub_links = remaining.join(
             touched.select(F.col("record_id").alias(ID_L)), ID_L, "left_semi"
         ).select(ID_L, ID_R)
-        sub = connected_components(sub_links, touched.select("record_id"), **kw)
+        sub = connected_components(
+            sub_links, touched.select("record_id"), checkpoint_dir=checkpoint_dir
+        )
         assignments = untouched.unionByName(sub)
 
     if added is None:
@@ -119,7 +118,9 @@ def maintain_components(
         added, new_records = new_records.select(
             F.col("record_id").alias(ID_L), F.col("record_id").alias(ID_R)
         ), None
-    return incremental_components(assignments, added, new_records, **kw)
+    return incremental_components(
+        assignments, added, new_records, checkpoint_dir=checkpoint_dir
+    )
 
 
 def decremental_components(
@@ -127,8 +128,6 @@ def decremental_components(
     links: DataFrame,
     removed_links: DataFrame,
     *,
-    max_iter: int = 50,
-    algorithm: str = "star",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Deletion-only convenience wrapper: re-cluster only the
@@ -139,7 +138,5 @@ def decremental_components(
         assignments,
         links,
         removed=removed_links,
-        max_iter=max_iter,
-        algorithm=algorithm,
         checkpoint_dir=checkpoint_dir,
     )

@@ -23,17 +23,17 @@ representatives a merge joins is the minimum of the merged component.
 ``incremental == from-scratch`` is asserted literally in
 tests/test_incremental_cc.py.
 
-Plan shape: with ``algorithm="star"`` and integral ids, the batch's
-links and one self-loop per new record are collected once as Arrow,
-capped at ``threshold // 16`` rows of two fixed-width ids.  When the
-rows and the distinct ids each fit, the driver holds no more than
+Plan shape: with integral ids, the batch's links and one self-loop per
+new record are collected once as Arrow, capped at ``threshold // 16``
+rows of two fixed-width ids.  When the rows and the distinct ids each
+fit, the driver holds no more than
 ``spark.sql.autoBroadcastJoinThreshold`` per collect: the ids go back
 as a broadcast relation, step 1 is collected (no more rows than the
 ids), step 3 is the union-find of ``connected_components``' driver
 finish, and the relabel map and the new rows are local relations.
-Otherwise (a batch over the cap, a threshold of ``-1``, string ids,
-``naive``), step 1 is checkpointed and step 3 is
-``connected_components`` over the representative edges.  Either way
+Otherwise (a batch over the cap, a threshold of ``-1``, string ids),
+step 1 is checkpointed and step 3 is ``connected_components`` over the
+representative edges.  Either way
 the caller's links plan runs once, and ``assignments`` is read twice
 per row: the lookup and the relabel.
 """
@@ -63,8 +63,6 @@ def incremental_components(
     new_links: DataFrame,
     new_records: DataFrame | None = None,
     *,
-    max_iter: int = 50,
-    algorithm: str = "star",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """→ DataFrame(record_id, component), identical to
@@ -77,11 +75,10 @@ def incremental_components(
     ``new_records`` (optional, column ``record_id``) adds singleton
     rows for genuinely new records that no new link mentions.
 
-    With ``algorithm="star"``, integral ids, and a batch whose rows and
-    distinct ids each fit the broadcast threshold, the fold is solved
-    on the driver (see the module docstring); ``max_iter`` and
-    ``checkpoint_dir`` then go unused, as they reach only the Spark
-    path's CC over the representative edges.
+    With integral ids and a batch whose rows and distinct ids each fit
+    the broadcast threshold, the fold is solved on the driver (see the
+    module docstring); ``checkpoint_dir`` then goes unused, as it
+    reaches only the Spark path's CC over the representative edges.
     """
     # the batch's upstream plan (often a scoring pipeline) runs once:
     # its first reader, the driver collect or the lookup below, fills
@@ -89,7 +86,7 @@ def incremental_components(
     # already a parquet checkpoint, so it stays lazy.
     nl = new_links.select(ID_L, ID_R).localCheckpoint(eager=False)
     cap = _broadcast_budget(nl.sparkSession) // _EDGE_BYTES
-    id_type = _fold_id_type(assignments, nl, new_records) if algorithm == "star" else None
+    id_type = _fold_id_type(assignments, nl, new_records)
     if id_type is not None and cap > 0:
         batch = _collect_batch(nl, new_records, id_type, cap)
         if batch is not None:
@@ -117,9 +114,7 @@ def incremental_components(
             F.coalesce("__cl", ID_L).alias(ID_L), F.coalesce("__cr", ID_R).alias(ID_R)
         )
     )
-    labels = connected_components(
-        reps, max_iter=max_iter, algorithm=algorithm, checkpoint_dir=checkpoint_dir
-    )
+    labels = connected_components(reps, checkpoint_dir=checkpoint_dir)
     # an old component is a record of `assignments`; a new id is not
     new_rows = labels.join(
         lookup.select(F.col("component").alias("record_id")), "record_id", "left_anti"

@@ -32,8 +32,6 @@ def components_at_thresholds(
     records: DataFrame | None = None,
     *,
     odds_col: str = "odds",
-    max_iter: int = 50,
-    algorithm: str = "star",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """→ DataFrame(threshold, record_id, component): the connected-
@@ -51,9 +49,6 @@ def components_at_thresholds(
     if len(set(thresholds)) != len(thresholds):
         raise ValueError(f"thresholds must be distinct, got {thresholds}")
     ts = sorted(thresholds, reverse=True)
-    kw = dict(
-        max_iter=max_iter, algorithm=algorithm, checkpoint_dir=checkpoint_dir
-    )
 
     # materialize the narrow (l, r, odds) projection once: every
     # threshold band filters it, and behind it can sit the whole
@@ -65,7 +60,7 @@ def components_at_thresholds(
     assignment = connected_components(
         scored_links.where(F.col(odds_col) >= ts[0]).select(ID_L, ID_R),
         records,
-        **kw,
+        checkpoint_dir=checkpoint_dir,
     ).persist()
     cached.append(assignment)
     out = assignment.select(
@@ -76,7 +71,9 @@ def components_at_thresholds(
         band = scored_links.where(
             (F.col(odds_col) >= t) & (F.col(odds_col) < prev)
         ).select(ID_L, ID_R)
-        assignment = incremental_components(assignment, band, **kw).persist()
+        assignment = incremental_components(
+            assignment, band, checkpoint_dir=checkpoint_dir
+        ).persist()
         cached.append(assignment)
         out = out.unionByName(
             assignment.select(

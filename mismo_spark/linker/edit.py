@@ -10,9 +10,11 @@ comparers after blocking (mismo/text/_similarity.py) — so this is a
 beyond-reference linker that makes typo-tolerant blocking itself
 scale-safe.
 
-Dedupe tasks take the exchange-reused self-join path
-(``edit_distance_pairs``); link tasks the two-table path with a shared
-global gram order (``edit_distance_link``).  Links carry a
+Dedupe tasks call ``edit_distance_pairs`` and link tasks
+``edit_distance_link``; both run the same prefix-filter join, which
+for dedupe is a self-join of one record relation and for link joins
+two, under one global gram order over both sides.  Building the links
+runs Spark jobs at call time when ``max_distance > 0``.  Links carry a
 ``distance`` column for downstream comparers/filters.
 """
 

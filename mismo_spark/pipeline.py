@@ -229,7 +229,6 @@ class DedupePipeline:
     seed: int = 42
     checkpoint: bool = True
     comparers: list[EnumComparer] = field(default_factory=default_comparers)
-    cc_algorithm: str = "star"
 
     # ------------------------------------------------------------------
 
@@ -495,12 +494,9 @@ class DedupePipeline:
         components = self._stage(
             spark,
             "06_components",
-            self._fp(fp_matches, "components", self.cc_algorithm),
+            self._fp(fp_matches, "components"),
             lambda: connected_components(
-                matches,
-                records.select("record_id"),
-                algorithm=self.cc_algorithm,
-                checkpoint_dir=cc_dir,
+                matches, records.select("record_id"), checkpoint_dir=cc_dir
             ),
         )
         return components

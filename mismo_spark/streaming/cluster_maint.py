@@ -119,8 +119,8 @@ def incremental_cluster_stream(
     seed_records = _keyed(corpus) if corpus is not None else None
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+        # an empty batch is not probed for: it folds to an unchanged
+        # assignment, and a probe would cost a Spark job every batch
         new = _keyed(batch)
         prev_v = _latest_version(state_dir)
         if prev_v is not None:

@@ -37,7 +37,12 @@ so candidate buckets are small by construction (anti-skew without
 salting); the global order is realized per record as an
 (df, gram)-struct sort — no global rank pass.  Verification is the
 JVM built-in ``levenshtein`` (whole-stage codegen) on the narrow
-(id, string) table, broadcast under the byte gate.
+(id, string) tables, broadcast under the byte gate.
+
+Dedupe (:func:`edit_distance_pairs`) and link
+(:func:`edit_distance_link`) run one plan, ``_edjoin``, over two
+record relations; dedupe passes one relation as both sides, which
+makes it a self-join that emits each unordered pair once.
 """
 
 from __future__ import annotations
@@ -272,9 +277,10 @@ def edit_distance_pairs(
     diversity (:func:`choose_q`).
 
     Not lazy when ``max_distance > 0``: building the result runs Spark
-    jobs at call time (``choose_q``'s scans, and eager
-    ``localCheckpoint``s of the gram-hashed records, the gram
-    frequencies and the prefix relation, so the surrogate ids stay
+    jobs at call time (``choose_q``'s scans, the broadcast size
+    estimates, and eager ``localCheckpoint``s of the gram frequencies
+    and the prefix relation; the first of them also fills the
+    gram-hashed records' checkpoint, which keeps the surrogate ids
     stable).  Those checkpoints stay in executor storage for the rest
     of the session.
     """
@@ -289,187 +295,11 @@ def edit_distance_pairs(
     if q != "auto" and (not isinstance(q, int) or q < 1):
         raise ValueError(f"q must be >= 1 or 'auto', got {q}")
     if d == 0:
-        # exact-equality fast path: one groupBy on the string itself
-        recs0 = df.select(F.col(id_col).alias("__id"), s.alias("__s")).where(
-            F.col("__s").isNotNull()
-        )
-        l0, r0 = recs0.alias("l"), recs0.alias("r")
-        return (
-            l0.join(
-                r0,
-                on=[
-                    F.col("l.__s") == F.col("r.__s"),
-                    F.col("l.__id") < F.col("r.__id"),
-                ],
-            )
-            .select(
-                F.col("l.__id").alias("record_id_l"),
-                F.col("r.__id").alias("record_id_r"),
-                F.lit(0).alias("distance"),
-            )
-        )
-    prefix_len = q * d + 1
-
-    # ---- one materialized base relation, surrogate long ids -------------
-    # The original record id can be any type (the bench field is a
-    # ~50-byte URL string); every downstream exchange — the per-record
-    # rank groupBy, the prefix self-join, the candidate stream — would
-    # carry it on every row.  Factorize to a dense long surrogate ONCE
-    # and run the whole pipeline on (sid, len, gram-hash) longs (guide
-    # §2.3: narrower types, project before the exchange); originals are
-    # re-attached to the ~|result|-sized verified stream at the end.
-    # Grams are hashed to xxhash64 codes HERE, at materialization, so
-    # the per-record gram build + hash runs exactly once (the previous
-    # shape re-evaluated the recs subtree in up to four consumers).
-    # Soundness of hashed grams: the prefix lemma holds under ANY
-    # global total order over gram types — (df, hash) is one — and a
-    # hash collision only MERGES two gram types, which can only ADD
-    # candidate pairs; the bounded-levenshtein verification removes
-    # them, so the result is identical.  (The 2^-64 corner where two
-    # grams of the SAME record collide shrinks that record's effective
-    # type count by one — the same exposure the repo's minhash family
-    # already accepts for xxhash64.)  The surrogate is pinned by the
-    # eager localCheckpoint (monotonically_increasing_id is otherwise
-    # not stable across re-executions).
-    recs = (
-        df.select(
-            F.col(id_col).alias("__id"),
-            s.alias("__s"),
-            F.length(s).alias("__len"),
-            F.transform(
-                _padded_grams(s, q=q, pad_char=pad_char),
-                lambda g: F.xxhash64(g),
-            ).alias("__ghs"),
-        )
-        .where(F.col("__s").isNotNull())
-        .withColumn("__sid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
+        return _exact(df, s, df, s, id_col).where(F.col("record_id_l") < F.col("record_id_r"))
+    recs = _records(df, s, id_col=id_col, q=q, pad_char=pad_char)
+    return _edjoin(
+        recs, recs, d=d, q=q, broadcast_records_max_bytes=broadcast_records_max_bytes
     )
-
-    # ---- long path: rarity-ordered q-gram prefix join -------------------
-    longs = recs.where(F.size("__ghs") >= prefix_len)
-    toks = explode_computed(longs, ["__sid", "__len"], F.col("__ghs"), "gram")
-    freq = toks.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    # gram-type-sized: materialize once, and broadcast under the byte
-    # gate so the token relation is not shuffled by gram just to attach
-    # df ranks (the rank join was this stage's largest exchange)
-    freq = freq.localCheckpoint(eager=True)
-    if should_broadcast(freq, max_bytes=broadcast_records_max_bytes):
-        freq = F.broadcast(freq)
-    ranked = (
-        toks.join(freq, "gram")
-        .groupBy("__sid", "__len")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "gram"))).alias("gs"))
-    )
-    pref = ranked.select(
-        "__sid",
-        "__len",
-        F.explode(F.slice("gs", 1, prefix_len)).alias("g"),
-    ).select("__sid", "__len", F.col("g.gram").alias("gram"))
-    # materialize once: the prefix self-join references pref on BOTH
-    # sides and Spark re-executes the aliased subtree — without this
-    # the gram explode → global-df rank pipeline runs twice
-    pref = pref.localCheckpoint(eager=True)
-    l, r = pref.alias("l"), pref.alias("r")
-    # surrogate order is just as good as id order for emitting each
-    # unordered pair once; the canonical l < r orientation on ORIGINAL
-    # ids is restored after verification
-    cand_long = (
-        l.join(
-            r,
-            on=[
-                F.col("l.gram") == F.col("r.gram"),
-                F.col("l.__sid") < F.col("r.__sid"),
-                F.abs(F.col("l.__len") - F.col("r.__len")) <= F.lit(d),
-            ],
-        )
-        .select(
-            F.col("l.__sid").alias("__sid_l"),
-            F.col("r.__sid").alias("__sid_r"),
-        )
-    )
-
-    # ---- fallback: length-bucket join for low-gram-diversity strings ----
-    # < q·d + 1 DISTINCT grams ⇒ the pigeonhole gives no guarantee, so
-    # these records probe ALL records at lengths within ±d (no partner
-    # length cap: "aaaaaaaa" is length 8 with only 3 distinct bigrams,
-    # and its distance-2 partner "aaaaaa" is length 6 — a cap derived
-    # from the gram count would wrongly exclude it)
-    shorts = recs.where(F.size("__ghs") < prefix_len).select("__sid", "__len")
-    partners = recs.select(
-        F.col("__sid").alias("__pid"), F.col("__len").alias("__plen")
-    )
-    probe = shorts.select(
-        "__sid",
-        F.explode(
-            F.sequence(
-                F.greatest(F.col("__len") - d, F.lit(0)), F.col("__len") + d
-            )
-        ).alias("__plen"),
-    )
-    cand_short = (
-        probe.join(partners, "__plen")
-        .where(F.col("__sid") != F.col("__pid"))
-        .select(
-            F.least("__sid", "__pid").alias("__sid_l"),
-            F.greatest("__sid", "__pid").alias("__sid_r"),
-        )
-    )
-
-    cands = cand_long.unionByName(cand_short)
-
-    # ---- verify: JVM bounded levenshtein on the narrow (sid, string) ----
-    narrow = recs.select(F.col("__sid").alias("__vid"), "__s")
-    idmap = recs.select("__sid", "__id")
-    if should_broadcast(narrow, max_bytes=broadcast_records_max_bytes):
-        # Broadcast regime: the candidate stream is NEVER exchanged —
-        # raw (possibly gram-duplicated) pairs flow map-side through
-        # two broadcast-hash joins and the threshold-bounded
-        # levenshtein; only verified survivors reach a shuffle for the
-        # final dedupe.  Deduping BEFORE verify would shuffle the full
-        # candidate stream — on low-gram-diversity fields (few distinct
-        # q-gram types, so even the rarest per-record grams land in
-        # big prefix buckets) that exchange costs far more than the
-        # O(d·len) distance checks it saves.
-        narrow = F.broadcast(narrow)
-        idmap = F.broadcast(idmap)
-    else:
-        # Huge-table regime (narrow side beyond the byte gate): the
-        # verify joins must shuffle anyway, so shrink the pair stream
-        # before them.
-        cands = cands.dropDuplicates(["__sid_l", "__sid_r"])
-    verified = (
-        cands.join(narrow, cands["__sid_l"] == narrow["__vid"])
-        .select("__sid_l", "__sid_r", F.col("__s").alias("__sl"))
-        .join(narrow, F.col("__sid_r") == narrow["__vid"])
-        .select(
-            "__sid_l",
-            "__sid_r",
-            # 3-arg form: bounded O(d·len) DP, -1 when distance > d
-            F.levenshtein(F.col("__sl"), F.col("__s"), d).alias("distance"),
-        )
-        .where(F.col("distance") >= 0)
-    )
-    # re-attach original ids to the verified (result-sized) stream and
-    # restore the canonical record_id_l < record_id_r orientation; the
-    # original-id != filter preserves the historical "a record cannot
-    # pair with an id-equal record" behaviour on degenerate inputs
-    out = (
-        verified.join(idmap, verified["__sid_l"] == idmap["__sid"])
-        .select("__sid_r", "distance", F.col("__id").alias("__oid_l"))
-        .join(idmap, F.col("__sid_r") == idmap["__sid"])
-        .select(
-            F.least("__oid_l", "__id").alias("record_id_l"),
-            F.greatest("__oid_l", "__id").alias("record_id_r"),
-            "distance",
-        )
-        .where(F.col("record_id_l") != F.col("record_id_r"))
-    )
-    # result-sized dedupe in BOTH regimes: in the broadcast regime this
-    # is where gram-duplicated candidates collapse; in the huge-table
-    # regime the sid-level dedupe above already shrank the stream and
-    # this pass only guards degenerate duplicate-id inputs
-    return out.dropDuplicates(["record_id_l", "record_id_r"])
 
 
 def edit_distance_link(
@@ -485,13 +315,20 @@ def edit_distance_link(
     broadcast_records_max_bytes: int = 512 << 20,
 ) -> DataFrame:
     """Two-table form: all (left, right) pairs with
-    ``levenshtein ≤ max_distance`` — same exact filters as
+    ``levenshtein ≤ max_distance`` — the same join as
     :func:`edit_distance_pairs` (which covers the self-join/dedupe
     case), with ONE shared global gram order computed over both sides'
     grams so the prefix lemma holds across tables.
 
     → (record_id_l, record_id_r, distance) — NOT deduplicated to
-    ``l < r`` (the ids live in different tables)."""
+    ``l < r`` (the ids live in different tables).
+
+    Not lazy when ``max_distance > 0``: building the result runs Spark
+    jobs at call time (``choose_q``'s scans, the broadcast size
+    estimates, and an eager ``localCheckpoint`` of the gram
+    frequencies, which also fills each side's gram-hashed records
+    checkpoint).  Those checkpoints stay in executor storage for the
+    rest of the session."""
     d = int(max_distance)
     if d < 0:
         raise ValueError(f"max_distance must be >= 0, got {max_distance}")
@@ -505,136 +342,195 @@ def edit_distance_link(
         )
     if q != "auto" and (not isinstance(q, int) or q < 1):
         raise ValueError(f"q must be >= 1 or 'auto', got {q}")
+    if d == 0:
+        return _exact(left, ls, right, rs, id_col)
+    return _edjoin(
+        _records(left, ls, id_col=id_col, q=q, pad_char=pad_char),
+        _records(right, rs, id_col=id_col, q=q, pad_char=pad_char),
+        d=d,
+        q=q,
+        broadcast_records_max_bytes=broadcast_records_max_bytes,
+    )
 
-    def _recs(df, s):
-        return df.select(
+
+def _exact(left: DataFrame, ls, right: DataFrame, rs, id_col: str) -> DataFrame:
+    """The d == 0 fast path: one equi-join on the string itself (a
+    NULL string never equals anything)."""
+    return (
+        left.select(F.col(id_col).alias("record_id_l"), ls.alias("__s"))
+        .join(right.select(F.col(id_col).alias("record_id_r"), rs.alias("__s")), "__s")
+        .select("record_id_l", "record_id_r", F.lit(0).alias("distance"))
+    )
+
+
+def _records(df: DataFrame, s, *, id_col: str, q: int, pad_char: str) -> DataFrame:
+    """One side's record relation: (__id, __s, __len, __ghs, __sid) for
+    the non-null strings ``s``.
+
+    The original id can be any type (the bench field is a ~50-byte URL
+    string), so every exchange of the join — the rank groupBy, the
+    prefix join, the candidate stream — runs on the dense long
+    surrogate ``__sid`` instead; the verify join re-attaches ``__id``.
+    Grams are hashed once, here.  Soundness of hashed grams: the prefix
+    lemma holds under ANY global total order over gram types — (df,
+    hash) is one — and a collision only MERGES two gram types, which
+    can only ADD candidates that verification removes.  (Two grams of
+    the SAME record colliding, at 2^-64, shrinks its type count by one:
+    the exposure the minhash family already accepts for xxhash64.)
+
+    The checkpoint is lazy: the join's first job (the gram frequencies)
+    fills it, and every later reader sees the same surrogate ids
+    (monotonically_increasing_id is not stable across re-executions)."""
+    return (
+        df.select(
             F.col(id_col).alias("__id"),
             s.alias("__s"),
             F.length(s).alias("__len"),
-            _padded_grams(s, q=q, pad_char=pad_char).alias("__grams"),
-        ).where(F.col("__s").isNotNull())
-
-    lrec, rrec = _recs(left, ls), _recs(right, rs)
-    if d == 0:
-        return (
-            lrec.select(F.col("__id").alias("record_id_l"), "__s")
-            .join(
-                rrec.select(F.col("__id").alias("record_id_r"), "__s"), "__s"
-            )
-            .select("record_id_l", "record_id_r", F.lit(0).alias("distance"))
+            F.transform(
+                _padded_grams(s, q=q, pad_char=pad_char),
+                lambda g: F.xxhash64(g),
+            ).alias("__ghs"),
         )
+        .where(F.col("__s").isNotNull())
+        .withColumn("__sid", F.monotonically_increasing_id())
+        .localCheckpoint(eager=False)
+    )
+
+
+def _edjoin(
+    lrecs: DataFrame, rrecs: DataFrame, *, d: int, q: int, broadcast_records_max_bytes: int
+) -> DataFrame:
+    """The Ed-Join plan over two :func:`_records` relations, d > 0 →
+    (record_id_l, record_id_r, distance).
+
+    ``lrecs is rrecs`` makes it the dedupe self-join: one token and
+    prefix relation serves both sides, each unordered pair is emitted
+    once, and the result is oriented record_id_l < record_id_r."""
+    same = lrecs is rrecs
     prefix_len = q * d + 1
 
-    # shared global order: document frequency over BOTH sides' grams —
-    # materialized once (gram-type-sized), since each side's prefix
-    # ranking joins it and would otherwise re-run the two-sided
-    # explode + groupBy shuffle.  Grams ride as xxhash64 codes (same
-    # soundness argument as edit_distance_pairs: any global order
-    # works, collisions only add verified-away candidates).
-    all_toks = explode_computed(lrec, [], F.col("__grams"), "gram").unionByName(
-        explode_computed(rrec, [], F.col("__grams"), "gram")
-    ).select(F.xxhash64("gram").alias("gram"))
+    # ---- long path: rarity-ordered q-gram prefix join -------------------
+    def tokens(recs):
+        longs = recs.where(F.size("__ghs") >= prefix_len)
+        return explode_computed(longs, ["__sid", "__len"], F.col("__ghs"), "gram")
+
+    ltoks = tokens(lrecs)
+    rtoks = ltoks if same else tokens(rrecs)
+    # the shared global order: document frequency over both sides'
+    # grams.  Gram-type-sized: materialize once, and broadcast under
+    # the byte gate so the token relation is not shuffled by gram just
+    # to attach df ranks (the rank join was this stage's largest
+    # exchange)
     freq = (
-        all_toks.groupBy("gram")
+        (ltoks if same else ltoks.unionByName(rtoks))
+        .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("df"))
         .localCheckpoint(eager=True)
     )
     if should_broadcast(freq, max_bytes=broadcast_records_max_bytes):
         freq = F.broadcast(freq)
 
-    def _prefix(recs):
-        toks = explode_computed(
-            recs, ["__id", "__len"], F.col("__grams"), "gram"
-        ).select("__id", "__len", F.xxhash64("gram").alias("gram"))
-        ranked = (
+    def prefix(toks):
+        return (
             toks.join(freq, "gram")
-            .groupBy("__id", "__len")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("df", "gram"))).alias("gs")
-            )
+            .groupBy("__sid", "__len")
+            .agg(F.array_sort(F.collect_list(F.struct("df", "gram"))).alias("gs"))
+            .select("__sid", "__len", F.explode(F.slice("gs", 1, prefix_len)["gram"]).alias("gram"))
         )
-        return ranked.select(
-            "__id",
-            "__len",
-            F.explode(F.slice("gs", 1, prefix_len)).alias("g"),
-        ).select("__id", "__len", F.col("g.gram").alias("gram"))
 
-    lp = _prefix(lrec.where(F.size("__grams") >= prefix_len)).alias("l")
-    rp = _prefix(rrec.where(F.size("__grams") >= prefix_len)).alias("r")
-    cand_long = (
-        lp.join(
-            rp,
-            on=[
-                F.col("l.gram") == F.col("r.gram"),
-                F.abs(F.col("l.__len") - F.col("r.__len")) <= F.lit(d),
-            ],
-        )
-        .select(
-            F.col("l.__id").alias("record_id_l"),
-            F.col("r.__id").alias("record_id_r"),
-        )
+    lp = prefix(ltoks)
+    if same:
+        # materialize once: the self-join references the prefix on BOTH
+        # sides and Spark re-executes the aliased subtree — without
+        # this the gram explode → global-df rank pipeline runs twice
+        lp = rp = lp.localCheckpoint(eager=True)
+    else:
+        rp = prefix(rtoks)
+    on = [
+        F.col("l.gram") == F.col("r.gram"),
+        F.abs(F.col("l.__len") - F.col("r.__len")) <= F.lit(d),
+    ]
+    if same:
+        # surrogate order emits each unordered pair once; the canonical
+        # orientation on ORIGINAL ids is restored after verification
+        on.append(F.col("l.__sid") < F.col("r.__sid"))
+    cands = (
+        lp.alias("l")
+        .join(rp.alias("r"), on=on)
+        .select(F.col("l.__sid").alias("__sid_l"), F.col("r.__sid").alias("__sid_r"))
     )
 
-    # low-gram-diversity fallback, run from EACH side against the other
-    # (length-bucket probe, no partner length cap — see module docstring)
-    def _short_cands(short_side, other_side, short_is_left: bool):
-        shorts = short_side.where(F.size("__grams") < prefix_len).select(
-            "__id", "__len"
-        )
-        partners = other_side.select(
-            F.col("__id").alias("__pid"), F.col("__len").alias("__plen")
-        )
-        probe = shorts.select(
-            "__id",
+    # ---- fallback: length-bucket join for low-gram-diversity strings ----
+    # < q·d + 1 DISTINCT grams ⇒ the pigeonhole gives no guarantee, so
+    # these records probe ALL partner records at lengths within ±d (no
+    # partner length cap: "aaaaaaaa" is length 8 with only 3 distinct
+    # bigrams, and its distance-2 partner "aaaaaa" is length 6 — a cap
+    # derived from the gram count would wrongly exclude it)
+    def short_cands(shorts, partners, a, b):
+        """Low-diversity records of ``shorts`` (sid as ``a``) paired
+        with every record of ``partners`` (sid as ``b``) within ±d."""
+        probe = shorts.where(F.size("__ghs") < prefix_len).select(
+            F.col("__sid").alias(a),
             F.explode(
-                F.sequence(
-                    F.greatest(F.col("__len") - d, F.lit(0)),
-                    F.col("__len") + d,
-                )
-            ).alias("__plen"),
+                F.sequence(F.greatest(F.col("__len") - d, F.lit(0)), F.col("__len") + d)
+            ).alias("__len"),
         )
-        joined = probe.join(partners, "__plen")
-        if short_is_left:
-            return joined.select(
-                F.col("__id").alias("record_id_l"),
-                F.col("__pid").alias("record_id_r"),
-            )
-        return joined.select(
-            F.col("__pid").alias("record_id_l"),
-            F.col("__id").alias("record_id_r"),
+        return probe.join(partners.select(F.col("__sid").alias(b), "__len"), "__len")
+
+    if same:
+        a, b = F.col("__a"), F.col("__b")
+        short = short_cands(lrecs, lrecs, "__a", "__b").where(a != b)
+        short = short.select(F.least(a, b).alias("__sid_l"), F.greatest(a, b).alias("__sid_r"))
+    else:
+        # run from EACH side against the other
+        short = short_cands(lrecs, rrecs, "__sid_l", "__sid_r").unionByName(
+            short_cands(rrecs, lrecs, "__sid_r", "__sid_l")
         )
+    cands = cands.unionByName(short.select("__sid_l", "__sid_r"))
 
-    cands = cand_long.unionByName(_short_cands(lrec, rrec, True)).unionByName(
-        _short_cands(rrec, lrec, False)
-    )
+    # ---- verify: JVM bounded levenshtein on the narrow (sid, id, s) -----
+    def narrow(recs, side):
+        return recs.select(*[F.col(c).alias(f"{c}_{side}") for c in ("__sid", "__id", "__s")])
 
-    lnarrow = lrec.select(F.col("__id").alias("__lvid"), F.col("__s").alias("__sl"))
-    rnarrow = rrec.select(F.col("__id").alias("__rvid"), F.col("__s").alias("__sr"))
-    # same two regimes as edit_distance_pairs: when BOTH narrow sides
-    # broadcast, the raw candidate stream is verified map-side and only
-    # survivors shuffle for the dedupe; otherwise shrink it first —
-    # but still broadcast whichever side individually fits (asymmetric
-    # link tasks: a small reference table against a huge corpus)
-    bl = should_broadcast(lnarrow, max_bytes=broadcast_records_max_bytes)
-    br = should_broadcast(rnarrow, max_bytes=broadcast_records_max_bytes)
-    dedupe_late = bl and br
+    ln, rn = narrow(lrecs, "l"), narrow(rrecs, "r")
+    bl = should_broadcast(ln, max_bytes=broadcast_records_max_bytes)
+    br = bl if same else should_broadcast(rn, max_bytes=broadcast_records_max_bytes)
+    # With both sides broadcast, the raw (gram-duplicated) candidates
+    # are verified map-side and only survivors shuffle, for the final
+    # dedupe: deduping first would shuffle the whole candidate stream,
+    # which on low-gram-diversity fields (big prefix buckets) costs far
+    # more than the O(d·len) checks it saves.  Otherwise the verify
+    # joins shuffle anyway, so the stream shrinks first; a side that
+    # fits is still broadcast (a small reference table against a huge
+    # corpus).
     if bl:
-        lnarrow = F.broadcast(lnarrow)
+        ln = F.broadcast(ln)
     if br:
-        rnarrow = F.broadcast(rnarrow)
-    if not dedupe_late:
-        cands = cands.dropDuplicates(["record_id_l", "record_id_r"])
-    verified = (
-        cands.join(lnarrow, cands["record_id_l"] == lnarrow["__lvid"])
-        .join(rnarrow, F.col("record_id_r") == rnarrow["__rvid"])
+        rn = F.broadcast(rn)
+    if not (bl and br):
+        cands = cands.dropDuplicates(["__sid_l", "__sid_r"])
+    out = (
+        cands.join(ln, "__sid_l")
+        .join(rn, "__sid_r")
         .select(
-            "record_id_l",
-            "record_id_r",
+            F.col("__id_l").alias("record_id_l"),
+            F.col("__id_r").alias("record_id_r"),
             # 3-arg form: bounded O(d·len) DP, -1 when distance > d
-            F.levenshtein(F.col("__sl"), F.col("__sr"), d).alias("distance"),
+            F.levenshtein(F.col("__s_l"), F.col("__s_r"), d).alias("distance"),
         )
         .where(F.col("distance") >= 0)
     )
-    if dedupe_late:
-        verified = verified.dropDuplicates(["record_id_l", "record_id_r"])
-    return verified
+    if same:
+        # restore the canonical record_id_l < record_id_r orientation;
+        # the != filter keeps the historical "a record cannot pair with
+        # an id-equal record" behaviour on degenerate inputs
+        out = out.select(
+            F.least("record_id_l", "record_id_r").alias("record_id_l"),
+            F.greatest("record_id_l", "record_id_r").alias("record_id_r"),
+            "distance",
+        ).where(F.col("record_id_l") != F.col("record_id_r"))
+    # result-sized dedupe in both regimes: with both sides broadcast
+    # this is where gram-duplicated candidates collapse; otherwise the
+    # sid-level dedupe above already shrank the stream and this pass
+    # only guards degenerate duplicate-id inputs
+    return out.dropDuplicates(["record_id_l", "record_id_r"])

@@ -198,9 +198,11 @@ def _jaro_winkler(s1: str, s2: str, p: float = 0.1, max_prefix: int = 4) -> floa
 
 
 def _damerau_levenshtein(s1: str, s2: str) -> int:
-    """Optimal-string-alignment variant (edit distance + adjacent
-    transpositions), matching DuckDB's builtin used by the reference
-    (mismo/text/_similarity.py:40-47)."""
+    """Optimal-string-alignment (OSA) variant: edit distance plus
+    adjacent transpositions, where no substring is edited twice.  It
+    does NOT match DuckDB's ``damerau_levenshtein`` (the builtin the
+    reference calls, mismo/text/_similarity.py:40-47), which is the
+    unrestricted distance: ("ca", "abc") is 3 here and 2 in DuckDB 1.0."""
     n1, n2 = len(s1), len(s2)
     if n1 == 0:
         return n2

@@ -3,6 +3,7 @@ with each micro-batch folded on the driver and on the Spark path."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -90,11 +91,54 @@ def test_incremental_cluster_stream_no_seed(spark, tmp_path, fold):
     assert got == {5: 5, 6: 5, 7: 7}
 
 
+def test_incremental_cluster_stream_empty_drop(spark, tmp_path, fold):
+    """An empty drop file between two non-empty drops is a micro-batch
+    of its own; it leaves the assignment unchanged, so the drained
+    state equals a from-scratch CC."""
+    incoming = str(tmp_path / "incoming")
+    batch1 = [(1, "a"), (2, "a"), (3, "b")]
+    batch2 = [(4, "b"), (5, "a"), (6, "c")]
+    for i, rows in enumerate([batch1, [], batch2]):
+        if i:
+            time.sleep(1.1)  # distinct mtimes -> one micro-batch per drop
+        _df(spark, rows).coalesce(1).write.mode("append").parquet(incoming)
+
+    state_dir = str(tmp_path / "state")
+    q = incremental_cluster_stream(
+        spark,
+        input_dir=incoming,
+        key_columns=["key"],
+        state_dir=state_dir,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        schema=_df(spark, []).schema,
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
+
+    assert sorted(os.listdir(os.path.join(state_dir, "assignments"))) == ["v0", "v1", "v2"]
+    got = {
+        r["record_id"]: r["component"]
+        for r in read_assignments(spark, state_dir).collect()
+    }
+    everything = _df(spark, batch1 + batch2)
+    full = connected_components(
+        KeyLinker(["key"], task="dedupe")(everything).links,
+        everything.select("record_id"),
+    )
+    want = {r["record_id"]: r["component"] for r in full.collect()}
+    assert got == want
+    assert want == {1: 1, 2: 1, 5: 1, 3: 3, 4: 3, 6: 6}
+
+
 @pytest.mark.parametrize("fold", ["spark"], indirect=True)
 @pytest.mark.parametrize(
     "case",
-    [test_incremental_cluster_stream, test_incremental_cluster_stream_no_seed],
-    ids=["seeded", "no-seed"],
+    [
+        test_incremental_cluster_stream,
+        test_incremental_cluster_stream_no_seed,
+        test_incremental_cluster_stream_empty_drop,
+    ],
+    ids=["seeded", "no-seed", "empty-drop"],
 )
 def test_stream_on_spark_path(spark, tmp_path, fold, case):
     case(spark, tmp_path, fold)

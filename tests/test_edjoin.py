@@ -129,6 +129,27 @@ def test_edit_distance_link_matches_bruteforce(spark):
         assert got == exp
 
 
+@pytest.mark.parametrize("d", [1, 2])
+def test_link_of_one_table_with_itself_equals_pairs(spark, d):
+    """Dedupe and link run one join: linking a table with itself,
+    restricted to record_id_l < record_id_r, gives the dedupe rows."""
+    rows = _mutated_corpus(n=60, seed=3) + [
+        (100, "kitten"), (101, "kitten"), (102, None), (103, None),
+        (104, "aaaaaaaa"), (105, "aaaaaaa"), (106, "aaaaaaaa"),
+    ]
+    df = spark.createDataFrame(rows, "record_id long, name string")
+    from mismo_spark.text.edjoin import edit_distance_link
+
+    def rows_of(out):
+        return {tuple(r) for r in out.select("record_id_l", "record_id_r", "distance").collect()}
+
+    link = edit_distance_link(df, df, "name", max_distance=d)
+    got = rows_of(link.where(F.col("record_id_l") < F.col("record_id_r")))
+    want = rows_of(edit_distance_pairs(df, "name", max_distance=d))
+    assert got == want
+    assert {(l, r) for l, r, _ in want} == _brute(rows, d)
+
+
 def test_edit_distance_linker_protocol(spark):
     from mismo_spark.linker.edit import EditDistanceLinker
 
