@@ -6,12 +6,12 @@ record-linkage task, vs jobs/dedupe_webpages.py's self-dedupe).
         --output links.parquet [--weights-json w.json]
         [--best-match-only | --one-to-one] [--threshold-odds 10]
 
-Flow: prepare records on both sides (same derivation as the dedupe
-pipeline — byte-identical text extraction per url) → blocking with
-``task='link'`` (domain equi-join ∪ minhash-LSH band join) → one Arrow
-pass of pairwise features → Fellegi-Sunter scoring (provided weights,
-or EM trained on the compared pairs) → odds threshold → optionally keep
-only each left record's best match.  Output:
+Flow: the dedupe pipeline's own stages with ``task='link'``
+(``DedupePipeline.prepare_records`` on both sides, ``blocker("link")``:
+domain equi-join ∪ minhash-LSH band join, ``compared``: one Arrow pass
+of pairwise features, and its blocked-pair EM unless weights are
+given) → Fellegi-Sunter scoring → odds threshold → optionally keep only
+each left record's best match or a 1:1 assignment.  Output:
 (record_id_l, record_id_r, odds).
 """
 
@@ -42,6 +42,8 @@ def main(argv: list[str] | None = None) -> dict:
                     "mutually exclusive with --best-match-only")
     ap.add_argument("--seed", type=int, default=42)
     args = ap.parse_args(argv)
+    if args.one_to_one and args.best_match_only:
+        ap.error("--one-to-one and --best-match-only are mutually exclusive")
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -54,64 +56,31 @@ def main(argv: list[str] | None = None) -> dict:
         .getOrCreate()
     )
 
-    from mismo_spark.compare.enum import compare
     from mismo_spark.fs.weights import Weights
-    from mismo_spark.linker.key import KeyLinker
-    from mismo_spark.linker.lsh import MinhashLshLinker
-    from mismo_spark.linker.or_ import OrLinker
-    from mismo_spark.pipeline import DedupePipeline, pair_features
-    from mismo_spark.types.linkage import Linkage
+    from mismo_spark.pipeline import DedupePipeline
 
-    pipe = DedupePipeline(work_dir="/tmp/_unused", checkpoint=False, seed=args.seed)
-    left = pipe.prepare_records(spark.read.parquet(args.left))
-    right = pipe.prepare_records(spark.read.parquet(args.right))
-    left.persist(); right.persist()
-
-    blocker = OrLinker(
-        track_rules=False,
-        linkers={
-            "domain": KeyLinker(
-                ["domain"],
-                task="link",
-                max_pairs=args.max_pairs_per_key,
-                skew_split=args.skew_split_pairs,
-            ),
-            "lsh": MinhashLshLinker(
-                "shingle_hashes",
-                band_size=args.lsh_band_size,
-                n_bands=args.lsh_n_bands,
-                seed=args.seed,
-                task="link",
-            ),
-        },
+    pipe = DedupePipeline(
+        work_dir=args.output,  # checkpoint=False: nothing is written there
+        checkpoint=False,
+        weights=Weights.from_json(args.weights_json) if args.weights_json else None,
+        max_pairs_per_key=args.max_pairs_per_key,
+        skew_split_pairs=args.skew_split_pairs,
+        lsh_band_size=args.lsh_band_size,
+        lsh_n_bands=args.lsh_n_bands,
+        em_max_pairs=args.em_max_pairs,
+        seed=args.seed,
     )
-    links = blocker(left, right).links
-
-    narrow_cols = ["record_id", "path", "prefix", "text_fp", "tok_hashes", "shingle_hashes"]
-    pairs = Linkage(
-        left.select(*narrow_cols), right.select(*narrow_cols), links
-    ).links_with_both()
-    compared = compare(pair_features(pairs), pipe.comparers).select(
-        "record_id_l", "record_id_r", *[c.name for c in pipe.comparers]
-    )
-    compared.persist()
+    left = pipe.prepare_records(spark.read.parquet(args.left)).persist()
+    right = pipe.prepare_records(spark.read.parquet(args.right)).persist()
+    links = pipe.blocker("link")(left, right).links
+    compared = pipe.compared(left, right, links).persist()
     n_compared = compared.count()
-
-    if args.weights_json:
-        weights = Weights.from_json(args.weights_json)
-    else:
-        # EM over the blocked comparison vectors (same recipe as the
-        # dedupe pipeline: bounded hash-filter sample, one joint
-        # histogram, driver-side iteration)
-        pipe.em_max_pairs = args.em_max_pairs
-        weights = pipe._train_weights(compared)
+    weights = pipe.weights if pipe.weights is not None else pipe._train_weights(compared)
 
     scored = weights.score_compared(compared).select(
         "record_id_l", "record_id_r", "odds"
     )
     matches = scored.filter(F.col("odds") >= args.threshold_odds)
-    if args.one_to_one and args.best_match_only:
-        ap.error("--one-to-one and --best-match-only are mutually exclusive")
     if args.one_to_one:
         from mismo_spark.linker.assignment import one_to_one_links
 

@@ -169,11 +169,10 @@ def _is_smallish(df: DataFrame) -> bool:
         return False
 
 
-def estimate_broadcast_bytes(
-    df: DataFrame, *, n_rows: int | None = None, sample_rows: int = 2000
-) -> int:
-    """Estimated size of ``df`` if broadcast: row count × average
-    serialized row size measured on a small sample.
+def estimate_broadcast_bytes(df: DataFrame, *, n_rows: int | None = None) -> int:
+    """Estimated size of ``df`` if broadcast: row count (``n_rows``,
+    counted when not given) × average serialized row size measured on
+    its first 2000 rows.
 
     Row COUNT is the wrong unit for a broadcast decision — a "narrow"
     record table carrying token/shingle hash arrays can be KBs per row,
@@ -186,7 +185,7 @@ def estimate_broadcast_bytes(
     if n_rows == 0:
         return 0
     row = (
-        df.limit(sample_rows)
+        df.limit(2000)
         .select(F.octet_length(F.to_json(F.struct(*df.columns))).alias("__sz"))
         .agg(F.avg("__sz").alias("avg"))
         .first()
@@ -194,15 +193,13 @@ def estimate_broadcast_bytes(
     return int((row["avg"] or 0.0) * n_rows)
 
 
-def should_broadcast(
-    df: DataFrame, *, max_bytes: int = 512 << 20, n_rows: int | None = None
-) -> bool:
+def should_broadcast(df: DataFrame, *, max_bytes: int = 512 << 20) -> bool:
     """Byte-gated broadcast policy: hash-broadcast ``df`` only while its
     estimated materialized size fits ``max_bytes`` (default 512 MiB —
     comfortably under Spark's 8 GB broadcast hard limit and typical
     executor overheads).  Beyond it, callers fall back to shuffle joins
     (AQE still applies)."""
-    return estimate_broadcast_bytes(df, n_rows=n_rows) <= max_bytes
+    return estimate_broadcast_bytes(df) <= max_bytes
 
 
 def sample_table(df: DataFrame, n: int, *, method: str = "hash", seed: int = 42) -> DataFrame:

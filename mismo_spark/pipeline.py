@@ -355,7 +355,13 @@ class DedupePipeline:
             F.regexp_extract(F.col("url"), r"^[a-z]+://[^/]+(/.*)?$", 1).alias("path"),
         )
 
-    def blocker(self) -> OrLinker:
+    def blocker(self, task: str = "dedupe") -> OrLinker:
+        """Domain key ∪ minhash-LSH blocking for ``task``: "dedupe" (one
+        table with itself, ``record_id_l < record_id_r``) or "link" (two
+        tables).  Without a per-key cap, "link" over one table restricted
+        to ``record_id_l < record_id_r`` equals "dedupe"; under a cap they
+        differ, since a key's pairs count ``n_l·n_r`` for link and
+        ``n(n−1)/2`` for dedupe."""
         # track_rules=False: the pipeline consumes only the pair set —
         # per-pair rule provenance would be a collect_set object-agg
         # over every candidate pair (sort-based fallback, see OrLinker)
@@ -364,7 +370,7 @@ class DedupePipeline:
             linkers={
                 "domain": KeyLinker(
                     ["domain"],
-                    task="dedupe",
+                    task=task,
                     max_pairs=self.max_pairs_per_key,
                     skew_split=self.skew_split_pairs,
                 ),
@@ -376,9 +382,30 @@ class DedupePipeline:
                     band_size=self.lsh_band_size,
                     n_bands=self.lsh_n_bands,
                     seed=self.seed,
-                    task="dedupe",
+                    task=task,
                 ),
             }
+        )
+
+    def compared(self, left: DataFrame, right: DataFrame, links: DataFrame) -> DataFrame:
+        """Comparison vectors ``(record_id_l, record_id_r, <comparer>...)``
+        of ``links`` between prepared records; ``run`` passes one table
+        as both sides."""
+        # join back only the columns the comparers read — the pair
+        # table is the biggest thing in the pipeline, so every column
+        # dropped here is shuffle volume saved.  Broadcast the narrow
+        # feature tables while both fit (see Linkage.links_with_both):
+        # the pair table then streams with zero shuffles through them.
+        cols = ["record_id", "path", "prefix", "text_fp", "tok_hashes", "shingle_hashes"]
+        narrow_l = left.select(*cols)
+        narrow_r = narrow_l if right is left else right.select(*cols)
+        max_bytes = self.broadcast_records_max_bytes
+        bcast = should_broadcast(narrow_l, max_bytes=max_bytes) and (
+            narrow_r is narrow_l or should_broadcast(narrow_r, max_bytes=max_bytes)
+        )
+        pairs = Linkage(narrow_l, narrow_r, links).links_with_both(broadcast_records=bcast)
+        return compare(pair_features(pairs), self.comparers).select(
+            ID_L, ID_R, *[c.name for c in self.comparers]
         )
 
     def _comparers_fingerprint(self) -> str:
@@ -437,30 +464,12 @@ class DedupePipeline:
             lambda: self.blocker()(records, records).links,
         )
 
-        def _compared():
-            # join back only the columns the comparers read — the pair
-            # table is the biggest thing in the pipeline, so every
-            # column dropped here is shuffle volume saved.  Broadcast
-            # the narrow feature table while it fits (see
-            # Linkage.links_with_both): the pair table then streams
-            # with zero shuffles through the feature joins.
-            narrow = records.select(
-                "record_id", "path", "prefix", "text_fp", "tok_hashes", "shingle_hashes"
-            )
-            bcast = should_broadcast(
-                narrow, max_bytes=self.broadcast_records_max_bytes
-            )
-            pairs = Linkage(narrow, narrow, links).links_with_both(
-                broadcast_records=bcast
-            )
-            return compare(pair_features(pairs), self.comparers).select(
-                ID_L, ID_R, *[c.name for c in self.comparers]
-            )
-
         fp_compared = self._fp(
             fp_links, "compared", "v2", self._comparers_fingerprint()
         )
-        compared = self._stage(spark, "03_compared", fp_compared, _compared)
+        compared = self._stage(
+            spark, "03_compared", fp_compared, lambda: self.compared(records, records, links)
+        )
 
         if self.weights is None:
             self.weights = self._artefact(

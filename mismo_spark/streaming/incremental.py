@@ -53,18 +53,11 @@ def incremental_link_stream(
         components, "record_id", "left"
     )
 
-    # blocking key: normalized domain (deterministic, stream-safe).
-    # The LSH rule needs a static band-key table on the corpus side —
-    # computed once here; the stream side derives its band keys
-    # per micro-batch with the same seeds.
-    from mismo_spark.linker.lsh import MinhashLshLinker
-
-    lsh = MinhashLshLinker(
-        "shingle_hashes",
-        band_size=pipe.lsh_band_size,
-        n_bands=pipe.lsh_n_bands,
-        seed=pipe.seed,
-    )
+    # blocking: the pipeline's minhash-LSH rule alone (its band keys
+    # are deterministic, so stream-safe).  It needs a static band-key
+    # table on the corpus side — computed once here; the stream side
+    # derives its band keys per micro-batch with the same seeds.
+    lsh = pipe.blocker("link").linkers["lsh"]
     # The static side's plan re-executes on EVERY micro-batch of a
     # stream-static join, so the corpus featurization + band derivation
     # is pinned once here.  At 100 TB, persist the banded corpus to

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,7 +18,9 @@ from pyspark.sql import functions as F
 from mismo_spark.cluster.metrics import pairwise_prf
 from mismo_spark.corpus import extract_text, make_corpus
 from mismo_spark.pipeline import DedupePipeline, input_identity, normalized_domain
-from mismo_spark.types.linkage import ID_L
+from mismo_spark.types.linkage import ID_L, ID_R
+
+from tests.conftest import broadcast_threshold
 
 
 @pytest.fixture(scope="module")
@@ -212,3 +215,61 @@ def test_pipeline_skew_split_identical_clusters(spark, corpus, tmp_path):
     a = {(r["record_id"], r["component"]) for r in plain.collect()}
     b = {(r["record_id"], r["component"]) for r in salted.collect()}
     assert a == b
+
+
+_FEATURES = ["record_id", "path", "prefix", "text_fp", "tok_hashes", "shingle_hashes"]
+
+
+def _pairs(links) -> set:
+    return {(r[ID_L], r[ID_R]) for r in links.select(ID_L, ID_R).collect()}
+
+
+def test_link_blocker_over_one_table_is_dedupe(spark, corpus, tmp_path):
+    """Without a per-key cap, the link blocker over one table, restricted
+    to ``record_id_l < record_id_r``, finds the dedupe blocker's pairs."""
+    pipe = DedupePipeline(work_dir=str(tmp_path), checkpoint=False, max_pairs_per_key=None)
+    r = pipe.prepare_records(corpus.drop("label_true")).cache()
+    dedupe = _pairs(pipe.blocker("dedupe")(r, r).links)
+    link = _pairs(pipe.blocker("link")(r, r).links.filter(F.col(ID_L) < F.col(ID_R)))
+    r.unpersist()
+    assert dedupe and link == dedupe
+
+
+def _compared_plan(spark, pipe, left, right, links) -> str:
+    with broadcast_threshold(spark, "-1"):
+        out = pipe.compared(left, right, links)
+        out.collect()
+        # the adaptive plan's final physical plan (not its initial one)
+        return out._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+@pytest.mark.parametrize("task", ["dedupe", "link"])
+def test_compared_broadcasts_record_features(spark, tmp_path, task):
+    """While the feature tables fit ``broadcast_records_max_bytes``, the
+    pair table reaches both feature joins with no shuffle: two broadcast
+    hash joins on the record ids and no sort-merge join, for one table
+    with itself and for two tables.  A right side over the budget makes
+    the two-table compare shuffle."""
+    pages = make_corpus(spark, 30, seed=5, skew_every=0).drop("label_true")
+    pipe = DedupePipeline(work_dir=str(tmp_path), checkpoint=False)
+    right = pipe.prepare_records(pages).cache()
+    left = right if task == "dedupe" else pipe.prepare_records(pages.limit(20)).cache()
+    # an in-memory pair table: no blocker join in the compared plan
+    links = spark.createDataFrame(
+        sorted(_pairs(pipe.blocker(task)(left, right).links)), f"{ID_L} string, {ID_R} string"
+    )
+    plan = _compared_plan(spark, pipe, left, right, links)
+    assert sorted(re.findall(r"BroadcastHashJoin \[(\w+)#\d+\]", plan)) == [ID_L, ID_R], plan
+    assert "SortMergeJoin" not in plan, plan
+    if task == "link":
+        from mismo_spark._util import estimate_broadcast_bytes
+
+        left_bytes = estimate_broadcast_bytes(left.select(*_FEATURES))
+        assert left_bytes < estimate_broadcast_bytes(right.select(*_FEATURES))
+        pipe = DedupePipeline(
+            work_dir=str(tmp_path), checkpoint=False, broadcast_records_max_bytes=left_bytes
+        )
+        plan = _compared_plan(spark, pipe, left, right, links)
+        assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan, plan
+    left.unpersist()
+    right.unpersist()
